@@ -377,7 +377,7 @@ object SparkEntry {
     // d46 = takedown impact audit: over the shared capped pair graph,
     // the pairs a delete wave (doc_id % 7 = 2) drops and the docs it
     // RELEASES (every dup partner dead — the phantom-veto-ended count
-    // the deleteFromTextProbeIndex lifecycle exists for); one all-
+    // the DurableIndex.textProbe delete lifecycle exists for); one all-
     // BIGINT row with the before = dead + released + after invariant.
     "d46_takedown_audit"     -> ((s, d) => Dedup.takedownAudit(s, d)),
     // d31 = the SHIPPED curated corpus read back: writeCuratedCorpus

@@ -95,9 +95,9 @@ private[graft] object CorpusIndexes {
     // persistSidecars key: it accretes from folds, not from a corpus
     // rebuild); bucketed on the consumer join column like text_labels
     "maint_labels"   -> Layout(8, "doc_id", Seq("doc_id")),
-    // the IVF index's DELETE log (owned by Similarity.deleteFromIvfIndex
-    // — accretes from deletes, folded away by compaction, never a
-    // persistSidecars key); tiny, bucketed on the anti-join key
+    // the IVF index's DELETE log (owned by DurableIndex.ivf — accretes
+    // from deletes, folded away by compaction, never a persistSidecars
+    // key); tiny, bucketed on the anti-join key
     "ivf_tombstones" -> Layout(4, "vec_id", Seq("vec_id")),
     // the historical positional-gram SET the span probes hit (d36 /
     // StreamingSpanDedup; owned by Dedup.persistSpanGramIndex) —
@@ -229,11 +229,10 @@ private[graft] object CorpusIndexes {
   private[ops] def sidecarPathExists(s: SparkSession, p: String): Boolean =
     pathExists(s, p)
 
-  /** The delete-log (tombstone) lifecycle shared by EVERY durable
-    * index family — IVF/PQ/SRP, the text probe tables, the media
-    * fingerprints — implemented once at the layer that owns bucketed
-    * tables: append-only log keyed `keyCol`, read-time masking,
-    * re-add guarding, and the compaction FOLD. Folding clears EXACTLY
+  /** The delete log (tombstones) under every [[DurableIndex]] family,
+    * implemented once at the layer that owns bucketed tables:
+    * append-only log keyed `keyCol`, re-add guarding, and the
+    * compaction FOLD. Folding clears EXACTLY
     * the rows it folded — an anti-join rewrite of the log against the
     * pinned snapshot, never a wholesale drop. Like every index
     * mutation, delete/refresh/fold are serialized by the index
@@ -270,18 +269,12 @@ private[graft] object CorpusIndexes {
     def load(s: SparkSession): Option[DataFrame] =
       if (hasRows(s)) Some(readBucketedTable(s, path, tbl, lay)) else None
 
-    /** Serve `frame` minus the log (no-op when no deletes exist). */
-    def mask(frame: DataFrame): DataFrame =
-      load(frame.sparkSession)
-        .map(ts => frame.join(ts, Seq(keyCol), "left_anti"))
-        .getOrElse(frame)
-
     /** Reject arrivals (a frame bearing `keyCol`) that are tombstoned:
       * a re-add before the fold would be stranded behind the serving
       * mask forever. NOTE the check-then-append of the callers is a
       * maintenance-op convention, not a concurrency primitive: index
       * mutations (refresh/delete/compact) are serialized by the index
-      * owner's maintenance window (the compactTextProbeIndex contract)
+      * owner's maintenance window (the DurableIndex contract)
       * — the guard catches operator error, not a concurrent delete
       * racing the append.
       */
@@ -318,11 +311,9 @@ private[graft] object CorpusIndexes {
           val pinned = ts.localCheckpoint()
           try {
             tables.foreach { case (p, t, l) =>
-              compactBucketedTable(s, p, t, l,
-                df => df.join(pinned, Seq(keyCol), "left_anti"))
+              compactBucketedTable(s, p, t, l, minusIds(_, pinned, keyCol))
             }
-            compactBucketedTable(s, path, tbl, lay,
-              df => df.join(pinned, Seq(keyCol), "left_anti"))
+            compactBucketedTable(s, path, tbl, lay, minusIds(_, pinned, keyCol))
           } finally pinned.queryExecution.analyzed.foreach {
             case l: org.apache.spark.sql.execution.LogicalRDD =>
               l.rdd.unpersist(false)
@@ -331,6 +322,14 @@ private[graft] object CorpusIndexes {
       }
     }
   }
+
+  /** `frame` minus the rows whose `keyCol` appears in `ids`, columns in
+    * `frame`'s own order (a USING anti-join would move `keyCol` first,
+    * and a fold would then write a reordered generation).
+    */
+  private[ops] def minusIds(frame: DataFrame, ids: DataFrame,
+                            keyCol: String): DataFrame =
+    frame.join(ids, frame(keyCol) === ids(keyCol), "left_anti")
 
   /** The marker file binding a sidecar root to its source corpus dir —
     * the guard against serving one corpus's indexes to another. Plain
@@ -557,10 +556,15 @@ private[graft] object CorpusIndexes {
     * parquet footer, so the schema is byte-authoritative. Registration
     * is double-checked under [[catalogLock]]: two doors seeing the
     * table for the first time in the same trigger must not both CREATE.
+    * An entry this session already resolved is REFRESHED first: its
+    * cached file listing is per session, and another session's append
+    * (the takedown door extending a delete log the serving door reads)
+    * would otherwise stay invisible here for the life of the session.
     */
   private[graft] def readBucketedTable(s: SparkSession, path: String,
       tbl: String, lay: Layout): DataFrame = {
-    if (!s.catalog.tableExists(tbl)) catalogLock.synchronized {
+    if (s.catalog.tableExists(tbl)) s.catalog.refreshTable(tbl)
+    else catalogLock.synchronized {
       if (!s.catalog.tableExists(tbl)) {
         // Footer inference needs a data file; an EMPTY generation (a
         // takedown wave deleted every row, then the fold compacted) has
@@ -734,7 +738,7 @@ private[graft] object CorpusIndexes {
 
   /** Compact every sidecar table under a [[persistSidecars]] root back
     * to one file per bucket — the snapshot-maintenance twin of
-    * [[graft.ops.Dedup.compactTextProbeIndex]] for roots that have seen
+    * [[DurableIndex.compact]] for roots that have seen
     * incremental appends. The `_graft_source` marker is untouched:
     * compaction changes layout, never provenance.
     */

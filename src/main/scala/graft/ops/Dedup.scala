@@ -731,11 +731,12 @@ object Dedup {
 
   /** The per-doc RAW probe rows — md5 store, UNCAPPED MinHash bands,
     * SimHash bands — for a (doc_id, text) slice. Shared by the
-    * in-session index build and the durable writer/refresher: every
-    * row here depends only on its own document, which is what makes
-    * the durable index APPEND-ONLY under refresh.
+    * in-session index build and the durable writer/refresher
+    * ([[DurableIndex.textProbe]]): every row here depends only on its
+    * own document, which is what makes the durable index APPEND-ONLY
+    * under refresh.
     */
-  private def rawProbeParts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[ops] def rawProbeParts(docs: DataFrame): Seq[DataFrame] = {
     val s = docs.sparkSession
     import s.implicits._
     val md5s = docs.select($"doc_id".as("hist_doc"), md5($"text").as("h"))
@@ -748,7 +749,7 @@ object Dedup {
         "transform(sequence(0, 3), j -> (simhash >> (15 * j)) & 32767)")))
       .select($"doc_id".as("hist_doc"), $"simhash".as("sim_b"),
         $"pos".as("band"), $"col".as("bval"))
-    (md5s, rawBands, simBands)
+    Seq(md5s, rawBands, simBands)
   }
 
   /** The df-cap applied to a raw band table — kept OUT of the stored
@@ -769,7 +770,7 @@ object Dedup {
 
   def buildTextProbeIndex(histDocs: DataFrame, cap: Int = 64,
                           materialize: Boolean = false): TextProbeIndex = {
-    val (md5s, rawBands, simBands) = rawProbeParts(histDocs)
+    val Seq(md5s, rawBands, simBands) = rawProbeParts(histDocs)
     val cappedBands = capBands(rawBands, cap)
     if (materialize)
       TextProbeIndex(md5s.localCheckpoint(), cappedBands.localCheckpoint(),
@@ -795,80 +796,16 @@ object Dedup {
       CorpusIndexes.memo(s, dir, "probe_sim")(idx.simBands))
   }
 
-  private val probeLayouts = Seq(
-    ("probe_md5s", CorpusIndexes.Layout(8, "h", Seq("h"))),
-    ("probe_raw_bands", CorpusIndexes.Layout(8, "bkey", Seq("bkey"))),
-    ("probe_sim_bands", CorpusIndexes.Layout(8, "bval", Seq("bval"))))
-
   /** DURABLE form of [[buildTextProbeIndex]]: write the three probe
-    * tables under `outDir`, each bucketed on the column the per-batch
-    * probe joins (md5 on `h`, MinHash bands on `bkey`, SimHash bands
-    * on `bval`) — the snapshot artifact a dedup service builds once
-    * and every streaming run reads. The band table stores the RAW
-    * (uncapped) rows: every stored row depends only on its own
-    * document, so a later crawl day appends ([[refreshTextProbeIndex]])
-    * instead of rebuilding; the global df cap re-derives at load.
-    * With the index side pre-bucketed, a probing batch shuffles only
-    * ITSELF to the bucket layout; the history never moves again.
+    * tables of [[DurableIndex.textProbe]] under `outDir` — the snapshot
+    * artifact a dedup service builds once and every streaming run
+    * reads. The band table stores the RAW (uncapped) rows, so a later
+    * crawl day appends instead of rebuilding; the global df cap
+    * re-derives at load. With the index side pre-bucketed, a probing
+    * batch shuffles only ITSELF to the bucket layout.
     */
-  def persistTextProbeIndex(histDocs: DataFrame, outDir: String,
-                            cap: Int = 64): Unit =
-    writeProbeParts(histDocs, outDir, append = false)
-
-  /** INCREMENTAL refresh: append a new slice's probe rows to the
-    * durable index — the crawl-day ingestion path. Pure appends (the
-    * rows are per-doc), so no text outside the delta is ever
-    * re-hashed; the df cap is not stored but re-derived at load over
-    * the merged rows, which makes the refreshed index equal a
-    * from-scratch rebuild on the union STRUCTURALLY — including a
-    * band key that crosses the cap only once the delta lands
-    * (both forms drop it; asserted with a crossing witness in
-    * SidecarDiskSpec). A tombstoned doc_id is REJECTED until the log
-    * folds (the IVF re-add contract: the serving mask would strand
-    * the re-added rows forever).
-    */
-  def refreshTextProbeIndex(newDocs: DataFrame, outDir: String): Unit = {
-    probeTomb(outDir).guardArrivals(
-      newDocs.select(col("doc_id").as("hist_doc")), "refreshTextProbeIndex")
-    writeProbeParts(newDocs, outDir, append = true)
-  }
-
-  // ---- delete/takedown for the durable text probe index ------------
-  //
-  // The IVF delete contract (Similarity.deleteFromIvfIndex) on the
-  // text modality: at 100 TB takedown (GDPR/DMCA) is a routine
-  // operation and an append-only dedup index otherwise lets a DELETED
-  // document keep vetoing arrivals as a phantom near-dup forever. The
-  // log is a doc-keyed tombstone table next to the three probe tables;
-  // serving masks (applied to the RAW band rows BEFORE the df cap
-  // re-derives, so masked serving == a rebuild without the deleted
-  // docs, including a band the deletions pull back under the cap);
-  // compaction folds the log into the files and clears it; a
-  // tombstoned id cannot re-enter through refresh until the fold.
-
-  // hist_doc-keyed delete log over the ONE shared lifecycle
-  // (CorpusIndexes.TombLog — masked serving, re-add guard,
-  // fold-clears-exactly-the-folded-rows).
-  private def probeTomb(outDir: String) =
-    CorpusIndexes.TombLog(outDir, "probe_tombstones", "hist_doc")
-
-  /** Append `ids` (doc_id) to the probe root's delete log. */
-  def deleteFromTextProbeIndex(ids: DataFrame, outDir: String): Unit =
-    probeTomb(outDir).append(ids.select(col("doc_id").as("hist_doc")))
-
-  /** The probe root's delete log, if any unfolded delete exists. */
-  def loadTextProbeTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    probeTomb(outDir).load(s)
-
-  private def writeProbeParts(docs: DataFrame, outDir: String,
-                              append: Boolean): Unit = {
-    val (md5s, rawBands, simBands) = rawProbeParts(docs)
-    probeLayouts.zip(Seq(md5s, rawBands, simBands)).foreach {
-      case ((key, lay), df) =>
-        CorpusIndexes.writeBucketedTable(df, s"$outDir/$key",
-          CorpusIndexes.tableName(outDir, key), lay, append = append)
-    }
-  }
+  def persistTextProbeIndex(histDocs: DataFrame, outDir: String): Unit =
+    DurableIndex.textProbe.persist(histDocs, outDir)
 
   /** d28 — the admission cascade COMPLETED with the compliance gate:
     * the d26 stages (quality → exact → MinHash → SimHash →
@@ -1031,57 +968,30 @@ object Dedup {
     s"${sys.props("java.io.tmpdir")}/graft_curated_${h}_$cap"
   }
 
-  /** COMPACT the durable probe index: rewrite each of the three probe
-    * tables to one file per bucket. Every [[refreshTextProbeIndex]]
-    * append adds a file per bucket per day; after a quarter of daily
-    * crawls each probe join opens ~90 files per bucket, and the
-    * per-file footer reads dwarf the row reads for 20-byte band rows.
-    * Compaction restores the one-file-per-bucket layout without
-    * changing a row — probe verdicts before and after are
-    * bit-identical (asserted in SidecarDiskSpec), so a campaign runs
-    * it on any cadence — in a maintenance window: the rename-aside
-    * swap (CorpusIndexes.compactBucketedTable) leaves no instant with
-    * the live path missing, but the old generation is deleted right
-    * after the swap, so only already-open read handles survive it;
-    * rotate roots where reader-concurrent compaction is needed.
+  /** The probe index as SERVED from three (md5, raw band, SimHash band)
+    * tables: the df cap applies here, over whatever rows the tables
+    * hold — which is what makes an incremental refresh equal a
+    * from-scratch rebuild, including a band key that crosses the cap
+    * only once a delta lands. Over the bucketed disk tables the cap's
+    * groupBy AND its join back run co-located on bkey: one zero-shuffle
+    * pass over 20-byte band rows, never a text re-hash.
     */
-  def compactTextProbeIndex(s: SparkSession, outDir: String): Unit =
-    probeTomb(outDir).foldInto(s, probeLayouts.map { case (key, lay) =>
-      (s"$outDir/$key", CorpusIndexes.tableName(outDir, key), lay)
-    })
+  def textProbeView(tables: Seq[DataFrame], cap: Int = 64): TextProbeIndex = {
+    val Seq(md5s, raw, sim) = tables
+    TextProbeIndex(md5s, capBands(raw, cap), sim)
+  }
 
-  /** Read the probe index persisted by [[persistTextProbeIndex]] (and
-    * any [[refreshTextProbeIndex]] appends) AS SERVED — what
-    * StreamingDedup/StreamingAdmission pass per micro-batch when given
-    * an index dir: no corpus pass at job start, the history reads
-    * straight from the bucketed disk tables. The df cap applies here,
-    * over whatever rows the tables hold; the cap's groupBy AND its
-    * join back both run co-located on the bkey bucketing — one
-    * zero-shuffle pass over 20-byte band rows per run, never a text
-    * re-hash. When a delete log exists, every table masks against it
+  /** Read the durable probe index under `outDir` AS SERVED — what
+    * StreamingDedup/StreamingAdmission probe per micro-batch when given
+    * an index dir. Every table masks against ONE delete-log snapshot
     * BEFORE the cap re-derives, so the served index equals a rebuild
-    * without the deleted docs — a taken-down document stops vetoing
+    * without the deleted docs: a taken-down document stops vetoing
     * arrivals as a phantom near-dup, and a band its deletions pull
     * back under the cap re-enters exactly as a rebuild would admit it.
     */
   def loadTextProbeIndex(s: SparkSession, outDir: String,
-                         cap: Int = 64): TextProbeIndex = {
-    // ONE log snapshot masks all three tables: three independent loads
-    // could resolve different log generations when a delete lands
-    // mid-load (supported — the takedown door test appends while the
-    // query runs), serving an index state no rebuild could produce
-    // (band rows masked, md5 row still vetoing). One load also costs
-    // one existence probe and one catalog resolution per trigger
-    // instead of three.
-    val ts = probeTomb(outDir).load(s)
-    def mask(df: DataFrame): DataFrame =
-      ts.map(t => df.join(t, Seq("hist_doc"), "left_anti")).getOrElse(df)
-    val Seq(md5s, raw, sim) = probeLayouts.map { case (key, lay) =>
-      mask(CorpusIndexes.readBucketedTable(s, s"$outDir/$key",
-        CorpusIndexes.tableName(outDir, key), lay))
-    }
-    TextProbeIndex(md5s, capBands(raw, cap), sim)
-  }
+                         cap: Int = 64): TextProbeIndex =
+    textProbeView(DurableIndex.textProbe.serving(s, outDir), cap)
 
   /** The frame-based core of [[incrementalDedupMulti]], shared with the
     * streaming ingest shape (each foreachBatch micro-batch probes a
@@ -2791,7 +2701,7 @@ object Dedup {
 
   /** d46 — TAKEDOWN IMPACT AUDIT: the report a compliance run ships
     * BEFORE executing a delete wave against the dedup index (the
-    * [[deleteFromTextProbeIndex]] lifecycle): over the capped LSH
+    * [[DurableIndex.textProbe]] delete lifecycle): over the capped LSH
     * candidate graph, how many near-dup pairs the wave drops, and —
     * the number the lifecycle exists for — how many surviving docs
     * are RELEASED (every one of their dup partners is taken down, so

@@ -446,7 +446,7 @@ object Multimodal {
     * consumed inside this narrow map; only (id, hash halves, n_px)
     * leave it.
     */
-  private def ahashRows(media: Dataset[PngRow]): Dataset[AHash] = {
+  private[ops] def ahashRows(media: Dataset[PngRow]): Dataset[AHash] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       ImageIO.setUseCache(false)
@@ -1291,57 +1291,6 @@ object Multimodal {
     wavFpSidecar(s, dir).filter($"doc_id" % 5 =!= 0).localCheckpoint()
   }
 
-  /** Build the durable audio probe index: decode+fingerprint `media`
-    * (one codec pass) and write the (doc_id, n_frames, energies) rows
-    * bucketed on the duration class under `outDir/wav_fp`.
-    */
-  def persistAudioIndex(media: Dataset[WavRow], outDir: String): Unit =
-    writeModalityPart(audioFingerprintRows(media).toDF(), outDir, "wav_fp",
-      append = false)
-
-  /** INCREMENTAL refresh: fingerprint a new clip slice and append.
-    * Tombstoned doc_ids are rejected until the log folds (the shared
-    * TombLog re-add contract).
-    */
-  def refreshAudioIndex(media: Dataset[WavRow], outDir: String): Unit = {
-    audioTomb(outDir).guardArrivals(media.toDF().select(col("doc_id")),
-      "refreshAudioIndex")
-    writeModalityPart(audioFingerprintRows(media).toDF(), outDir, "wav_fp",
-      append = true)
-  }
-
-  /** Rewrite the audio index to one file per bucket after appends
-    * (like ivf_assigned, the duration-class bucket column is
-    * low-cardinality — an empty hash bucket writes no file, so the
-    * restored count is AT MOST one per bucket).
-    */
-  def compactAudioIndex(s: SparkSession, outDir: String): Unit =
-    audioTomb(outDir).foldInto(s, Seq((s"$outDir/wav_fp",
-      CorpusIndexes.tableName(outDir, "wav_fp"),
-      CorpusIndexes.layouts("wav_fp"))))
-
-  // doc_id-keyed delete log over the shared lifecycle
-  // (CorpusIndexes.TombLog) — a taken-down clip must stop serving as
-  // anyone's nearest historical neighbor.
-  private def audioTomb(outDir: String) =
-    CorpusIndexes.TombLog(outDir, "wav_tombstones", "doc_id")
-
-  /** Append `ids` (doc_id) to the audio root's delete log. */
-  def deleteFromAudioIndex(ids: DataFrame, outDir: String): Unit =
-    audioTomb(outDir).append(ids)
-
-  /** The audio root's delete log, if any unfolded delete exists. */
-  def loadAudioTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    audioTomb(outDir).load(s)
-
-  /** Read the persisted audio index — the static side
-    * [[audioProbeBatch]] and the streaming audio door probe. Serves
-    * rows minus the delete log, so a masked read equals a rebuild
-    * without the deleted clips.
-    */
-  def loadAudioIndex(s: SparkSession, outDir: String): DataFrame =
-    audioTomb(outDir).mask(CorpusIndexes.readSidecar(s, outDir, "wav_fp"))
-
   final case class GifRow(doc_id: Long, payload: Array[Byte])
   final case class GifMeta(doc_id: Long, n_frames: Long, width: Long, height: Long,
                            pix_sum: Long, pix_wsum: Long)
@@ -1722,10 +1671,13 @@ object Multimodal {
 
   /** The earliest-carrier digest aggregate over any (doc_id, frame_no,
     * ahash_hi, ahash_lo) frame table — shared by the session-sidecar
-    * path above and the durable-index load below. Over the persisted
-    * `gif_frames` layout (bucketed on ahash_hi) this groupBy runs with
-    * ZERO exchanges: HashPartitioning(ahash_hi) satisfies the clustered
-    * distribution on (ahash_hi, ahash_lo).
+    * path above and the video door's durable index, where it runs over
+    * [[DurableIndex.video]]'s served rows: masking BEFORE the aggregate
+    * makes a deleted carrier promote the next-earliest, exactly as a
+    * rebuild would. Over the persisted `gif_frames` layout (bucketed on
+    * ahash_hi) this groupBy runs with ZERO exchanges:
+    * HashPartitioning(ahash_hi) satisfies the clustered distribution
+    * on (ahash_hi, ahash_lo).
     */
   def frameIndexOf(frames: DataFrame): DataFrame = {
     val s = frames.sparkSession
@@ -1801,143 +1753,6 @@ object Multimodal {
     */
   def videoFrameIndex(s: SparkSession, dir: String): DataFrame =
     histFrameIndex(s, dir).localCheckpoint()
-
-  // ---- durable image/video probe indexes --------------------------
-  //
-  // The text-probe discipline (Dedup.persistTextProbeIndex /
-  // refreshTextProbeIndex / compactTextProbeIndex) on the other two
-  // modalities: a campaign decodes+hashes each arrival slice ONCE, in
-  // the codec slot, and appends the hash rows to a bucketed disk
-  // table; every stored row depends only on its own media, so appends
-  // need no history re-decode and the merged table equals a
-  // from-scratch build structurally (asserted in SidecarDiskSpec).
-  // The streaming doors (`StreamingImageDedup`/`StreamingVideoDedup`)
-  // take the index dir and start with NO decode pass at all.
-
-  private def writeModalityPart(rows: DataFrame, outDir: String, key: String,
-                                append: Boolean): Unit =
-    CorpusIndexes.writeBucketedTable(rows, s"$outDir/$key",
-      CorpusIndexes.tableName(outDir, key), CorpusIndexes.layouts(key),
-      append = append)
-
-  /** Build the durable image probe index: decode+hash `media` (one
-    * codec pass, rasters never leave the map) and write the
-    * (doc_id, ahash_hi, ahash_lo, n_px) rows bucketed under
-    * `outDir/png_ahash`.
-    */
-  def persistImageIndex(media: Dataset[PngRow], outDir: String): Unit =
-    writeModalityPart(ahashRows(media).toDF(), outDir, "png_ahash",
-      append = false)
-
-  /** INCREMENTAL refresh: hash a new arrival slice and append — no
-    * history pixel is ever re-decoded (hash rows are per-image). A
-    * tombstoned doc_id is REJECTED until the log folds (the IVF
-    * re-add contract: the serving mask would strand the re-added
-    * row forever).
-    */
-  def refreshImageIndex(media: Dataset[PngRow], outDir: String): Unit = {
-    imageTomb(outDir).guardArrivals(media.toDF().select(col("doc_id")),
-      "refreshImageIndex")
-    writeModalityPart(ahashRows(media).toDF(), outDir, "png_ahash",
-      append = true)
-  }
-
-  /** Rewrite the image index to one file per bucket after appends.
-    * When a delete log exists it is FOLDED IN: tombstoned rows are
-    * physically absent from the new generation and the log is cleared
-    * — serving results are bit-identical before and after.
-    */
-  def compactImageIndex(s: SparkSession, outDir: String): Unit =
-    imageTomb(outDir).foldInto(s, Seq((s"$outDir/png_ahash",
-      CorpusIndexes.tableName(outDir, "png_ahash"),
-      CorpusIndexes.layouts("png_ahash"))))
-
-  // ---- delete/takedown for the durable image index ------------------
-  //
-  // The IVF/text-probe delete contract on the image fingerprint
-  // sidecar: a taken-down image must stop matching arrivals as a
-  // phantom perceptual dup (GDPR/DMCA takedown is routine at 100 TB,
-  // and an append-only fingerprint index otherwise only grows). Log,
-  // masked serving, fold-at-compaction, re-add-guard — one contract
-  // across every durable index family.
-
-  // doc_id-keyed delete log over the ONE shared lifecycle
-  // (CorpusIndexes.TombLog — masked serving, re-add guard,
-  // fold-clears-exactly-the-folded-rows).
-  private def imageTomb(outDir: String) =
-    CorpusIndexes.TombLog(outDir, "png_tombstones", "doc_id")
-
-  /** Append `ids` (doc_id) to the image root's delete log. */
-  def deleteFromImageIndex(ids: DataFrame, outDir: String): Unit =
-    imageTomb(outDir).append(ids)
-
-  /** The image root's delete log, if any unfolded delete exists. */
-  def loadImageTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    imageTomb(outDir).load(s)
-
-  /** Read the persisted image index — the static side
-    * [[imageProbeBatch]] and the streaming image door probe. Serves
-    * rows minus the delete log (no-op when no deletes exist), so a
-    * masked read equals a rebuild without the deleted images.
-    */
-  def loadImageIndex(s: SparkSession, outDir: String): DataFrame =
-    imageTomb(outDir).mask(CorpusIndexes.readSidecar(s, outDir, "png_ahash"))
-
-  /** Build the durable video frame-hash index: decode each GIF frame
-    * by frame in the codec slot and write the (doc_id, frame_no,
-    * ahash_hi, ahash_lo) rows bucketed on the digest under
-    * `outDir/gif_frames`.
-    */
-  def persistVideoIndex(media: Dataset[GifRow], outDir: String): Unit =
-    writeModalityPart(gifFrameAHashes(media).toDF(), outDir, "gif_frames",
-      append = false)
-
-  /** INCREMENTAL refresh: frame-hash a new clip slice and append.
-    * Tombstoned doc_ids are rejected until the log folds (the shared
-    * TombLog re-add contract).
-    */
-  def refreshVideoIndex(media: Dataset[GifRow], outDir: String): Unit = {
-    videoTomb(outDir).guardArrivals(media.toDF().select(col("doc_id")),
-      "refreshVideoIndex")
-    writeModalityPart(gifFrameAHashes(media).toDF(), outDir, "gif_frames",
-      append = true)
-  }
-
-  /** Rewrite the video index to one file per bucket after appends. */
-  def compactVideoIndex(s: SparkSession, outDir: String): Unit =
-    videoTomb(outDir).foldInto(s, Seq((s"$outDir/gif_frames",
-      CorpusIndexes.tableName(outDir, "gif_frames"),
-      CorpusIndexes.layouts("gif_frames"))))
-
-  // doc_id-keyed delete log over the shared lifecycle
-  // (CorpusIndexes.TombLog) — a taken-down clip's frames must stop
-  // carrying earliest-carrier matches.
-  private def videoTomb(outDir: String) =
-    CorpusIndexes.TombLog(outDir, "gif_tombstones", "doc_id")
-
-  /** Append `ids` (doc_id) to the video root's delete log. */
-  def deleteFromVideoIndex(ids: DataFrame, outDir: String): Unit =
-    videoTomb(outDir).append(ids)
-
-  /** The video root's delete log, if any unfolded delete exists. */
-  def loadVideoTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    videoTomb(outDir).load(s)
-
-  /** The persisted frame-hash rows, minus the delete log — masking
-    * BEFORE [[frameIndexOf]]'s earliest-carrier aggregate, so the
-    * served index equals a rebuild without the deleted clips
-    * (including a carrier whose deletion promotes the next-earliest).
-    */
-  def loadVideoFrames(s: SparkSession, outDir: String): DataFrame =
-    videoTomb(outDir).mask(CorpusIndexes.readSidecar(s, outDir, "gif_frames"))
-
-  /** The earliest-carrier probe index from the persisted frame table —
-    * what the streaming video door probes when given an index dir: a
-    * zero-exchange digest aggregate over the bucketed rows, never a
-    * decode.
-    */
-  def loadVideoFrameIndex(s: SparkSession, outDir: String): DataFrame =
-    frameIndexOf(loadVideoFrames(s, outDir))
 
   /** The media table: documents' text bytes standing in as payloads,
     * with a deterministic modality assignment.

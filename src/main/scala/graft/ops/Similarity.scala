@@ -20,7 +20,7 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
-  private def withNorm(df: DataFrame) =
+  private[ops] def withNorm(df: DataFrame) =
     df.select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
 
   /** Exact top-10 neighbors by cosine for query vectors vec_id < 5. */
@@ -902,7 +902,7 @@ object Similarity {
     * (vec_id, embedding) frame — shared by the corpus encode, the
     * query tables, and the upsert path.
     */
-  private def pqSubOf(vectors: DataFrame): DataFrame = {
+  private[ops] def pqSubOf(vectors: DataFrame): DataFrame = {
     val s = vectors.sparkSession
     import s.implicits._
     vectors
@@ -1267,7 +1267,7 @@ object Similarity {
     * a retrieval stack returns for the new vector (the dup-check /
     * attach-to-cluster read every ingest does).
     *
-    * The durable twin ([[refreshIvfIndex]]) appends exactly these
+    * The durable twin ([[DurableIndex.ivf]]'s refresh) appends exactly these
     * assignment rows to the persisted `ivf_assigned` table, and
     * serve-after-append == serve-after-rebuild under the frozen
     * codebook, bit for bit (SidecarDiskSpec).
@@ -1295,46 +1295,20 @@ object Similarity {
       .orderBy($"q_id", $"rank")
   }
 
-  // ---- durable IVF serving index: persist / upsert / compact --------
+  // ---- durable IVF serving index ([[DurableIndex.ivf]]) ---------------
   //
-  // The text/image/video probe-index discipline on the embedding
-  // modality: the index is a bucketed disk table of per-vector rows,
-  // arrivals append without touching history, compaction restores the
-  // one-file-per-bucket layout, and the streaming server
-  // (StreamingAnn.runFromSidecar) reads [index ∪ delta] with no
-  // rebuild. Assignment rows are per-vector AND the codebook is frozen
-  // in the stored rows themselves (cells seed from vec_id < 16), so an
-  // append equals a frozen-codebook rebuild structurally.
-
-  private def ivfLayoutParts(outDir: String) =
-    (s"$outDir/ivf_assigned", CorpusIndexes.tableName(outDir, "ivf_assigned"),
-      CorpusIndexes.layouts("ivf_assigned"))
-
-  private def ivfCodebookParts(outDir: String) =
-    (s"$outDir/ivf_codebook", CorpusIndexes.tableName(outDir, "ivf_codebook"),
-      CorpusIndexes.layouts("ivf_codebook"))
-
-  /** Write an assignment frame (vec_id, embedding, nrm, cell_id) as
-    * the durable serving index under `outDir/ivf_assigned`, bucketed
-    * on cell_id — the probe join's key — PLUS the coarse codebook as
-    * its own ≤16-row table under `outDir/ivf_codebook`. The codebook
-    * must ship separately because it CANNOT be re-derived from an
-    * upserted index: an appended arrival with vec_id < 16 would
-    * silently join a `vec_id < 16` re-derivation, unfreezing the
-    * centroids (and a query arg-maxed onto such a phantom cell would
-    * join no index row and vanish from serving).
-    */
-  def persistIvfIndex(index: DataFrame, outDir: String): Unit = {
-    val (path, tbl, lay) = ivfLayoutParts(outDir)
-    CorpusIndexes.writeBucketedTable(index, path, tbl, lay)
-    val (cp, ct, cl) = ivfCodebookParts(outDir)
-    CorpusIndexes.writeBucketedTable(codebookOf(index), cp, ct, cl)
-  }
+  // Assignment rows are per-vector over a codebook FROZEN at persist
+  // time and shipped as its own ≤16-row table next to the index, so an
+  // append equals a frozen-codebook rebuild structurally. The codebook
+  // cannot be re-derived from an upserted index: an appended arrival
+  // with vec_id < 16 would silently join a `vec_id < 16` re-derivation,
+  // unfreezing the centroids (and a query arg-maxed onto such a
+  // phantom cell would join no index row and vanish from serving).
 
   /** The FROZEN persisted codebook of a durable index root. Falls back
     * to deriving from the index for roots persisted before the
     * codebook table existed (e.g. the generic `persistSidecars`
-    * ivf_assigned) — sound for full rebuilds, and [[refreshIvfIndex]]
+    * ivf_assigned) — sound for full rebuilds, and [[ivfRows]]
     * materializes the codebook before its first append so any root
     * whose first upsert runs under current code never reaches the
     * fallback with appended rows. A root that already took upserts
@@ -1348,31 +1322,48 @@ object Similarity {
     * case still derives; the testdata corpora always carry ids 0-15,
     * so there it collides and trips the guard.)
     */
-  def loadIvfCodebook(s: SparkSession, outDir: String): DataFrame = {
-    val (cp, ct, cl) = ivfCodebookParts(outDir)
-    if (CorpusIndexes.sidecarPathExists(s, cp))
-      CorpusIndexes.readBucketedTable(s, cp, ct, cl)
+  def ivfCodebook(s: SparkSession, outDir: String): DataFrame =
+    if (CorpusIndexes.sidecarPathExists(s, s"$outDir/ivf_codebook"))
+      CorpusIndexes.readSidecar(s, outDir, "ivf_codebook")
     else {
-      val idx = loadIvfIndex(s, outDir)
+      val idx = DurableIndex.ivf.raw(s, outDir).head
       val dupSeedIds = idx.filter(col("vec_id") < 16)
         .groupBy("vec_id").count().filter(col("count") > 1).count()
       require(dupSeedIds == 0L,
         s"IVF root $outDir has no persisted codebook but its vec_id<16 " +
           "slice is multi-generation (a pre-codebook upsert landed seed " +
           "ids); deriving a codebook from it would unfreeze the " +
-          "centroids. Rebuild the index with persistIvfIndex.")
+          "centroids. Rebuild the index with DurableIndex.ivf.persist.")
       codebookOf(idx)
     }
+
+  /** The durable IVF index's arrival transform: each (vec_id, embedding)
+    * arrival assigned with the exact s04 argmax over the FROZEN
+    * persisted codebook — history is never read beyond the ≤16 codebook
+    * rows. On a root persisted before the codebook table existed, the
+    * codebook is derived ONCE from the (still append-free) index and
+    * materialized before the first append; after that every refresh
+    * reads the frozen table.
+    */
+  private[ops] def ivfRows(arrivals: DataFrame, outDir: String): DataFrame = {
+    val s = arrivals.sparkSession
+    val key = "ivf_codebook"
+    if (!CorpusIndexes.sidecarPathExists(s, s"$outDir/$key")) {
+      val cb = codebookOf(DurableIndex.ivf.raw(s, outDir).head)
+      CorpusIndexes.writeBucketedTable(cb, s"$outDir/$key",
+        CorpusIndexes.tableName(outDir, key), CorpusIndexes.layouts(key))
+    }
+    ivfAssignOverCodebook(arrivals, ivfCodebook(s, outDir))
   }
 
   /** Assign arriving (vec_id, embedding) rows over the FROZEN codebook
     * of an existing index — the one upsert transform, shared by the
-    * durable append ([[refreshIvfIndex]]) and the streaming ingest
+    * durable append ([[ivfRows]]) and the streaming ingest
     * door (`graft.streaming.StreamingAnnIngest`). Output rows have the
     * index's own schema (vec_id, embedding, nrm, cell_id), so they
     * append/union directly. Only valid when `index` is a REBUILD
     * (no appended rows) — durable paths use [[ivfAssignOverCodebook]]
-    * with the persisted codebook instead.
+    * with the persisted codebook ([[ivfCodebook]]) instead.
     */
   def ivfUpsertAssign(arrivals: DataFrame, index: DataFrame): DataFrame =
     assignByCodebook(withNorm(arrivals), codebookOf(index))
@@ -1381,121 +1372,9 @@ object Similarity {
   def ivfAssignOverCodebook(arrivals: DataFrame, cb: DataFrame): DataFrame =
     assignByCodebook(withNorm(arrivals), cb)
 
-  /** UPSERT arrivals (vec_id, embedding) into the persisted index:
-    * each arrival is assigned with the exact s04 argmax over the
-    * FROZEN persisted codebook, and the assignment rows append as new
-    * bucket files. History is never read beyond the ≤16 codebook
-    * rows, never rewritten. On a root persisted before the codebook
-    * table existed, the codebook is derived ONCE from the (still
-    * append-free) index and materialized before the first append —
-    * after that every refresh reads the frozen table.
-    */
-  def refreshIvfIndex(arrivals: DataFrame, outDir: String): Unit = {
-    val s = arrivals.sparkSession
-    val (path, tbl, lay) = ivfLayoutParts(outDir)
-    val (cp, ct, cl) = ivfCodebookParts(outDir)
-    if (!CorpusIndexes.sidecarPathExists(s, cp)) {
-      val idx = CorpusIndexes.readBucketedTable(s, path, tbl, lay)
-      CorpusIndexes.writeBucketedTable(codebookOf(idx), cp, ct, cl)
-    }
-    // Tombstoned ids are terminal until compaction folds the log (see
-    // the delete section): silently appending one would strand a row
-    // the serving mask hides forever.
-    guardTombstonedArrivals(arrivals, outDir, "ivf_tombstones", "refreshIvfIndex")
-    val rows = ivfAssignOverCodebook(arrivals, loadIvfCodebook(s, outDir))
-    CorpusIndexes.writeBucketedTable(rows, path, tbl, lay, append = true)
-  }
-
-  // ---- deletes: tombstone log, masked serving, physical fold -------
-  //
-  // The missing third verb of the index lifecycle (persist/refresh/
-  // compact covered writes; this covers UNwrites): a delete appends
-  // (vec_id) rows to a tiny tombstone log next to the index — history
-  // is never rewritten at delete time, the exact discipline appends
-  // follow — serving masks tombstoned rows with one anti-join, and
-  // the next compaction folds the log into the data files (deleted
-  // rows physically absent) and clears it. Deletes are terminal for
-  // an id until that fold: refresh REJECTS a tombstoned arrival
-  // (silently accepting it would strand a masked row that outlives
-  // the re-add — the classic tombstone/upsert race — so re-adding an
-  // id requires compacting first, which is cheap and explicit).
-
-  // The embedding families' delete logs, all vec_id-keyed — thin
-  // wrappers over the ONE shared lifecycle (CorpusIndexes.TombLog:
-  // masked serving, re-add guard, fold-clears-exactly-the-folded-rows).
-  private def tombLog(outDir: String, key: String) =
-    CorpusIndexes.TombLog(outDir, key, "vec_id")
-
-  private def appendTombstones(ids: DataFrame, outDir: String,
-                               key: String): Unit =
-    tombLog(outDir, key).append(ids)
-
-  private def loadTombstonesFor(s: SparkSession, outDir: String,
-                                key: String): Option[DataFrame] =
-    tombLog(outDir, key).load(s)
-
-  private def maskDeletesFor(frame: DataFrame, outDir: String,
-                             key: String): DataFrame =
-    tombLog(outDir, key).mask(frame)
-
-  private def guardTombstonedArrivals(arrivals: DataFrame, outDir: String,
-                                      key: String, op: String): Unit =
-    tombLog(outDir, key).guardArrivals(arrivals, op)
-
-  /** Compact a data table, folding its delete log in (physical
-    * removal; the log keeps only rows appended after the fold's
-    * snapshot) when one exists.
-    */
-  private def compactWithFold(s: SparkSession, dataPath: String,
-                              dataTbl: String, dataLay: CorpusIndexes.Layout,
-                              outDir: String, tombKey: String): Unit =
-    tombLog(outDir, tombKey)
-      .foldInto(s, Seq((dataPath, dataTbl, dataLay)))
-
-  /** Append `ids` (vec_id) to the IVF root's delete log. */
-  def deleteFromIvfIndex(ids: DataFrame, outDir: String): Unit =
-    appendTombstones(ids, outDir, "ivf_tombstones")
-
-  /** The root's delete log, if any delete ever ran. */
-  def loadIvfTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    loadTombstonesFor(s, outDir, "ivf_tombstones")
-
-  /** Mask a serving frame against the root's delete log (no-op when
-    * no deletes exist) — applied AFTER any index ∪ delta union so
-    * deletes hit upserted rows too.
-    */
-  def maskIvfDeletes(frame: DataFrame, outDir: String): DataFrame =
-    maskDeletesFor(frame, outDir, "ivf_tombstones")
-
-  /** The persisted index as consumers should SERVE it: rows minus the
-    * delete log. [[loadIvfIndex]] stays the raw-files read (the
-    * compaction specs diff physical generations through it).
-    */
-  def loadIvfIndexServing(s: SparkSession, outDir: String): DataFrame =
-    maskIvfDeletes(loadIvfIndex(s, outDir), outDir)
-
-  /** Rewrite the serving index to one file per bucket after upserts.
-    * When a delete log exists it is FOLDED IN: tombstoned rows are
-    * physically absent from the new generation's files and the log is
-    * cleared — serving results are bit-identical before and after
-    * (the mask just became the data).
-    */
-  def compactIvfIndex(s: SparkSession, outDir: String): Unit = {
-    val (path, tbl, lay) = ivfLayoutParts(outDir)
-    compactWithFold(s, path, tbl, lay, outDir, "ivf_tombstones")
-  }
-
-  /** Read the persisted serving index (including any upserted rows) —
-    * what [[ivfProbeBatch]] and StreamingAnn probe.
-    */
-  def loadIvfIndex(s: SparkSession, outDir: String): DataFrame = {
-    val (path, tbl, lay) = ivfLayoutParts(outDir)
-    CorpusIndexes.readBucketedTable(s, path, tbl, lay)
-  }
-
   // ---- durable PQ index: the codes half of IVF-PQ, upsertable ------
   //
-  // s22/refreshIvfIndex cover the COARSE half of the production IVF-PQ
+  // s22/DurableIndex.ivf cover the COARSE half of the production IVF-PQ
   // index (cell assignment); the codes half upserts the same way —
   // with one honest difference: the PQ codebook cannot be re-derived
   // from the stored codes (codes are centroid IDS; the codebook is the
@@ -1505,77 +1384,17 @@ object Similarity {
   // append — encode-after-append == frozen rebuild, ADC serving over
   // [index ∪ delta] identical (SidecarDiskSpec).
 
-  private def pqParts(outDir: String, key: String) =
-    (s"$outDir/$key", CorpusIndexes.tableName(outDir, key),
-      CorpusIndexes.layouts(key))
-
-  /** Write the PQ index for `vectors` (vec_id, embedding): the 4-byte
-    * code rows under `outDir/pq_codes` AND the 64-row subspace
-    * codebook (k, m, cv) under `outDir/pq_codebook` — codebooks ship
-    * with the index; they are what makes the codes decodable and the
-    * upsert reproducible.
+  /** The frozen subspace codebook (k, m, cv) shipped next to the codes
+    * of a [[DurableIndex.pq]] root — what makes the codes decodable and
+    * the upsert reproducible.
     */
-  def persistPqIndex(vectors: DataFrame, outDir: String): Unit = {
-    val s = vectors.sparkSession
-    import s.implicits._
-    val cb = pqSubOf(vectors).filter($"vec_id" < 16).toDF("k", "m", "cv")
-    val (cp, ct, cl) = pqParts(outDir, "pq_codes")
-    CorpusIndexes.writeBucketedTable(pqEncodeWith(vectors, cb), cp, ct, cl)
-    val (bp, bt, bl) = pqParts(outDir, "pq_codebook")
-    CorpusIndexes.writeBucketedTable(cb.select($"k", $"m", $"cv"), bp, bt, bl)
-  }
-
-  /** UPSERT arrivals (vec_id, embedding): encode against the PERSISTED
-    * (frozen) codebook and append the code rows. History is never
-    * re-encoded; the codebook is never touched.
-    */
-  def refreshPqIndex(arrivals: DataFrame, outDir: String): Unit = {
-    val s = arrivals.sparkSession
-    guardTombstonedArrivals(arrivals, outDir, "pq_tombstones", "refreshPqIndex")
-    val (cp, ct, cl) = pqParts(outDir, "pq_codes")
-    CorpusIndexes.writeBucketedTable(
-      pqEncodeWith(arrivals, loadPqCodebook(s, outDir)), cp, ct, cl,
-      append = true)
-  }
-
-  /** Append `ids` (vec_id) to the PQ root's delete log — the IVF
-    * delete contract on the codes half (see the delete section).
-    */
-  def deleteFromPqIndex(ids: DataFrame, outDir: String): Unit =
-    appendTombstones(ids, outDir, "pq_tombstones")
-
-  /** The PQ root's delete log, if any unfolded delete exists. */
-  def loadPqTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    loadTombstonesFor(s, outDir, "pq_tombstones")
-
-  /** The code rows as consumers should SERVE them: minus the log. */
-  def loadPqIndexServing(s: SparkSession, outDir: String): DataFrame =
-    maskDeletesFor(loadPqIndex(s, outDir), outDir, "pq_tombstones")
-
-  /** Rewrite the code table to one file per bucket after upserts,
-    * folding any delete log in (physical removal + log clear).
-    */
-  def compactPqIndex(s: SparkSession, outDir: String): Unit = {
-    val (cp, ct, cl) = pqParts(outDir, "pq_codes")
-    compactWithFold(s, cp, ct, cl, outDir, "pq_tombstones")
-  }
-
-  /** The persisted code rows (including any upserted arrivals). */
-  def loadPqIndex(s: SparkSession, outDir: String): DataFrame = {
-    val (cp, ct, cl) = pqParts(outDir, "pq_codes")
-    CorpusIndexes.readBucketedTable(s, cp, ct, cl)
-  }
-
-  /** The persisted frozen codebook. */
-  def loadPqCodebook(s: SparkSession, outDir: String): DataFrame = {
-    val (bp, bt, bl) = pqParts(outDir, "pq_codebook")
-    CorpusIndexes.readBucketedTable(s, bp, bt, bl)
-  }
+  def pqCodebook(s: SparkSession, outDir: String): DataFrame =
+    CorpusIndexes.readSidecar(s, outDir, "pq_codebook")
 
   /** s23 — PQ index upsert SERVE: the s22 story on the codes half of
     * IVF-PQ. Arrivals (vec_id ≡ 2 mod 7) build their ADC distance
     * tables against the FROZEN historical subspace codebook (the one
-    * [[persistPqIndex]] ships next to the codes — note subspace
+    * [[DurableIndex.pq]] ships next to the codes — note subspace
     * centroids 2 and 9 don't exist, the honest gapped-codebook shape)
     * and take their top-5 historical neighbors by quantized distance —
     * the 4-lookups-per-row serving read the durable PQ index answers
@@ -2406,7 +2225,7 @@ object Similarity {
     * hash under the frozen md5 seed and take their first Hamming
     * top-8 against the HISTORICAL signatures only — the read every
     * ingest does before its rows append to the durable `srp_sigs`
-    * table ([[refreshSrpIndex]]). Because the planes are seed-derived
+    * table ([[DurableIndex.srp]]). Because the planes are seed-derived
     * rather than trained, append-then-serve equals
     * rebuild-then-serve EXACTLY for all queries, not just unaffected
     * cells — the property s22 can only claim per-cell.
@@ -2530,62 +2349,6 @@ object Similarity {
       .filter($"rank" <= k)
       .select($"q_id", $"rank", $"vec_id", $"dot", $"n_clipped")
       .orderBy($"q_id", $"rank")
-  }
-
-  // ---- durable SRP signature index: persist via CorpusIndexes.
-  // persistSidecars ("srp_sigs"); append/compact below. No model
-  // tables: the md5 seed IS the model.
-
-  private def srpParts(outDir: String) =
-    (s"$outDir/srp_sigs", CorpusIndexes.tableName(outDir, "srp_sigs"),
-      CorpusIndexes.layouts("srp_sigs"))
-
-  /** Write a (vec_id, embedding) frame's signatures as the durable
-    * index under `outDir/srp_sigs` — the initial build; later crawls
-    * go through [[refreshSrpIndex]].
-    */
-  def persistSrpIndex(vecs: DataFrame, outDir: String): Unit = {
-    val (path, tbl, lay) = srpParts(outDir)
-    CorpusIndexes.writeBucketedTable(srpSignatures(vecs), path, tbl, lay)
-  }
-
-  /** Append arriving (vec_id, embedding) rows' signatures to the
-    * persisted table — no history read AT ALL (the s22 refresh still
-    * reads the stored codebook; SRP needs nothing).
-    */
-  def refreshSrpIndex(arrivals: DataFrame, outDir: String): Unit = {
-    guardTombstonedArrivals(arrivals, outDir, "srp_tombstones", "refreshSrpIndex")
-    val (path, tbl, lay) = srpParts(outDir)
-    CorpusIndexes.writeBucketedTable(srpSignatures(arrivals), path, tbl, lay,
-      append = true)
-  }
-
-  /** Append `ids` (vec_id) to the SRP root's delete log — the IVF
-    * delete contract on the signature index (see the delete section).
-    */
-  def deleteFromSrpIndex(ids: DataFrame, outDir: String): Unit =
-    appendTombstones(ids, outDir, "srp_tombstones")
-
-  /** The SRP root's delete log, if any unfolded delete exists. */
-  def loadSrpTombstones(s: SparkSession, outDir: String): Option[DataFrame] =
-    loadTombstonesFor(s, outDir, "srp_tombstones")
-
-  /** The signature rows as consumers should SERVE them: minus the log. */
-  def loadSrpIndexServing(s: SparkSession, outDir: String): DataFrame =
-    maskDeletesFor(loadSrpIndex(s, outDir), outDir, "srp_tombstones")
-
-  /** Rewrite to one file per bucket after upserts, folding any delete
-    * log in (physical removal + log clear).
-    */
-  def compactSrpIndex(s: SparkSession, outDir: String): Unit = {
-    val (path, tbl, lay) = srpParts(outDir)
-    compactWithFold(s, path, tbl, lay, outDir, "srp_tombstones")
-  }
-
-  /** Read the persisted signature index (including upserted rows). */
-  def loadSrpIndex(s: SparkSession, outDir: String): DataFrame = {
-    val (path, tbl, lay) = srpParts(outDir)
-    CorpusIndexes.readBucketedTable(s, path, tbl, lay)
   }
 
   def quantizationAudit(s: SparkSession, dir: String): DataFrame = {

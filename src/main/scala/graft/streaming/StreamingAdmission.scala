@@ -52,7 +52,7 @@ object StreamingAdmission {
     // Durable-sidecar path (StreamingDedup discipline): a persisted
     // index dir replaces the run-start corpus pass with bucketed
     // disk-table reads, RESOLVED PER BATCH so a takedown
-    // (Dedup.deleteFromTextProbeIndex) between triggers is honored by
+    // (DurableIndex.textProbe.delete) between triggers is honored by
     // the next batch without a restart.
     val resolve = resolver(docs, histDocs, indexDir)
     docs.writeStream

@@ -68,10 +68,7 @@ object StreamingAnn {
       // Serve, don't read raw: a root that has taken deletes carries a
       // tombstone log, and a probe server must never return a deleted
       // neighbor (no-op mask on delete-free roots).
-      graft.ops.Similarity.maskIvfDeletes(
-        graft.ops.CorpusIndexes.readSidecar(queries.sparkSession, sidecarRoot,
-          "ivf_assigned"),
-        sidecarRoot),
+      graft.ops.DurableIndex.ivf.serving(queries.sparkSession, sidecarRoot).head,
       outDir, checkpointDir)
 
   private def runWith(queries: DataFrame, idx: DataFrame, outDir: String,

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ANN index ingest — the s22 upsert as a production
@@ -12,15 +13,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * jobs close the online half of the IVF lifecycle: StreamingAnnIngest
   * admits vectors, StreamingAnn answers queries, s21's tombstones
   * cover deletes, and the periodic retrain/rebuild (s17/s19 +
-  * persistIvfIndex) rotates the snapshot.
+  * `DurableIndex.ivf.persist`) rotates the snapshot.
   *
-  * Why deltas, not in-place appends: `Similarity.refreshIvfIndex` is
+  * Why deltas, not in-place appends: `DurableIndex.ivf.refresh` is
   * the right batch-maintenance form, but an at-least-once replay of an
   * APPEND duplicates rows — appends are not idempotent. The streaming
   * door therefore uses the family's batch_id convention: each batch
   * OVERWRITES its own `deltaDir/batch_id=<n>` directory, so a replayed
   * batch rewrites identical rows in the same place (exactly-once
-  * output), and a later `refreshIvfIndex`/`compactIvfIndex` pass folds
+  * output), and a later refresh/compact pass folds
   * the accumulated deltas into the bucketed table on the maintenance
   * cadence.
   *
@@ -44,7 +45,7 @@ object StreamingAnnIngest {
 
   /** Start the job: `arrivals` is any streaming frame bearing
     * (vec_id, embedding); `indexDir` a durable index written by
-    * `Similarity.persistIvfIndex`; assignment rows land under
+    * `DurableIndex.ivf`; assignment rows land under
     * `deltaDir/batch_id=<n>/`.
     */
   def run(arrivals: DataFrame, indexDir: String, deltaDir: String,
@@ -54,7 +55,7 @@ object StreamingAnnIngest {
     // assignment needs; materialize it once per run (≤16 rows).
     // (Never re-derive from index rows: a prior upsert may have
     // appended arrivals with vec_id < 16.)
-    val cb = graft.ops.Similarity.loadIvfCodebook(s, indexDir).localCheckpoint()
+    val cb = graft.ops.Similarity.ivfCodebook(s, indexDir).localCheckpoint()
     arrivals.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.ops.Similarity.ivfAssignOverCodebook(batch, cb)
@@ -73,15 +74,22 @@ object StreamingAnnIngest {
     * schema inference (the deploy order IS index → ingest → serve).
     */
   def servingIndex(s: SparkSession, indexDir: String,
-                   deltaDir: String): DataFrame = {
-    val idx = graft.ops.Similarity.loadIvfIndex(s, indexDir)
+                   deltaDir: String): DataFrame =
+    servingWithDeltas(s, graft.ops.DurableIndex.ivf, indexDir, deltaDir)
+
+  /** A one-table durable index ∪ its streamed deltas, masked AFTER the
+    * union so a tombstone hits upserted rows too (no-op when the root
+    * has no delete log) — shared with the SRP door.
+    */
+  private[streaming] def servingWithDeltas(s: SparkSession,
+      index: graft.ops.DurableIndex, indexDir: String,
+      deltaDir: String): DataFrame = {
+    val Seq(idx) = index.raw(s, indexDir)
     val unioned =
       if (!hasParquet(s, deltaDir)) idx
-      else idx.unionByName(s.read.parquet(deltaDir)
-        .select("vec_id", "embedding", "nrm", "cell_id"))
-    // Deletes mask AFTER the union so a tombstone hits upserted rows
-    // too (no-op when the root has no delete log).
-    graft.ops.Similarity.maskIvfDeletes(unioned, indexDir)
+      else idx.unionByName(
+        s.read.parquet(deltaDir).select(idx.columns.map(col).toSeq: _*))
+    index.mask(s, indexDir, Seq(unioned)).head
   }
 
   /** True iff `dir` already holds at least one parquet part file

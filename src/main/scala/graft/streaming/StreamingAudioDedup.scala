@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * broadcasts (≤10-long integer fingerprints); the index is the
   * duration-class-bucketed fingerprint sidecar, static within a run,
   * swapped by snapshot rotation — or refreshed incrementally
-  * (`Multimodal.refreshAudioIndex`), since fingerprint rows are
+  * (`DurableIndex.audio.refresh`), since fingerprint rows are
   * per-clip.
   */
 object StreamingAudioDedup {
@@ -43,18 +43,18 @@ object StreamingAudioDedup {
     * `outDir/batch_id=<n>/`.
     *
     * Durable-index path: an `indexDir` written by
-    * `Multimodal.persistAudioIndex` (plus any `refreshAudioIndex`
-    * appends) replaces `index` — the job starts with NO decode pass,
+    * `DurableIndex.audio` (persist plus any refresh appends) replaces
+    * `index` — the job starts with NO decode pass,
     * reading fingerprints straight from the bucketed disk table.
     */
   def run(newMedia: DataFrame, index: DataFrame, outDir: String,
           checkpointDir: String,
           indexDir: Option[String] = None): StreamingQuery = {
     // Disk indexes re-resolve PER BATCH (the shared PerBatchIndex
-    // takedown discipline — deleteFromAudioIndex lands without a
+    // takedown discipline — DurableIndex.audio.delete lands without a
     // restart).
     val resolve = PerBatchIndex.resolver(indexDir,
-      d => graft.ops.Multimodal.loadAudioIndex(newMedia.sparkSession, d),
+      d => graft.ops.DurableIndex.audio.serving(newMedia.sparkSession, d).head,
       index)
     newMedia.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -41,8 +41,8 @@ object StreamingImageDedup {
     * sidecar; flagged rows land under `outDir/batch_id=<n>/`.
     *
     * Durable-index path: an `indexDir` written by
-    * `Multimodal.persistImageIndex` (plus any `refreshImageIndex`
-    * appends) replaces `index` — the job starts with NO decode pass,
+    * `DurableIndex.image` (persist plus any refresh appends) replaces
+    * `index` — the job starts with NO decode pass,
     * reading the hash rows straight from the bucketed disk table (the
     * snapshot-rotation shape at 100 TB).
     */
@@ -51,10 +51,10 @@ object StreamingImageDedup {
           indexDir: Option[String] = None): StreamingQuery = {
     // Disk indexes re-resolve PER BATCH (the shared PerBatchIndex
     // takedown discipline): a delete-log append
-    // (Multimodal.deleteFromImageIndex) between triggers is honored
+    // (DurableIndex.image.delete) between triggers is honored
     // by the next batch without a restart.
     val resolve = PerBatchIndex.resolver(indexDir,
-      d => graft.ops.Multimodal.loadImageIndex(newMedia.sparkSession, d)
+      d => graft.ops.DurableIndex.image.serving(newMedia.sparkSession, d).head
         .select("doc_id", "ahash_hi", "ahash_lo"),
       index)
     newMedia.writeStream

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Exactly-once: the family's batch_id convention — each batch
   * OVERWRITES its own `deltaDir/batch_id=<n>` directory, so an
   * at-least-once replay rewrites identical rows in place. A later
-  * `Similarity.refreshSrpIndex`/`compactSrpIndex` pass folds deltas
+  * `DurableIndex.srp` refresh/compact pass folds deltas
   * into the bucketed table on the maintenance cadence.
   *
   * Streaming == batch: signatures are a pure per-row function, so the
@@ -55,13 +55,12 @@ object StreamingSrpIngest {
 
   /** The serving view over a durable index plus its accumulated
     * streamed deltas — what any Hamming probe reads to serve
-    * [index ∪ delta] without a rebuild. Falls back to the index alone
-    * while the delta directory is still empty (pre-first-commit).
+    * [index ∪ delta] without a rebuild, minus the root's delete log.
+    * Falls back to the index alone while the delta directory is still
+    * empty (pre-first-commit).
     */
   def servingIndex(s: SparkSession, indexDir: String,
-                   deltaDir: String): DataFrame = {
-    val idx = graft.ops.Similarity.loadSrpIndex(s, indexDir)
-    if (!StreamingAnnIngest.hasParquet(s, deltaDir)) idx
-    else idx.unionByName(s.read.parquet(deltaDir).select("vec_id", "sig"))
-  }
+                   deltaDir: String): DataFrame =
+    StreamingAnnIngest.servingWithDeltas(s, graft.ops.DurableIndex.srp,
+      indexDir, deltaDir)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * while the serving doors keep running. The serving side needs no
   * cooperation beyond what it already does: StreamingDedup /
   * StreamingAdmission re-resolve the index per trigger
-  * (PerBatchIndex), and `Dedup.loadTextProbeIndex` masks every probe
+  * (PerBatchIndex), and `DurableIndex.serving` masks every probe
   * table against ONE log snapshot — so the first trigger after a wave
   * serves rebuild-minus-deleted, without restarting either query.
   *
@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Ordering/concurrency: appends to the log are serialized BY THE
   * DOOR (one micro-batch at a time — the lifecycle's maintenance-
   * window contract held by construction); the serving queries only
-  * READ the log. The fold (compactTextProbeIndex) stays a maintenance
+  * READ the log. The fold (`DurableIndex.compact`) stays a maintenance
   * operation outside this door, run when the door is idle.
   *
   * Scale shape: the wave is batch-sized; the anti-join and the append
@@ -40,16 +40,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingTakedown {
 
+  private val index = graft.ops.DurableIndex.textProbe
+
   /** One audit row from the post-append state — exposed so tests can
     * pin replay idempotence against the door's own output.
     */
   def auditBatch(s: SparkSession, indexDir: String,
                  nArrived: Long, nNew: Long): DataFrame = {
     import s.implicits._
-    val nTombstones = graft.ops.Dedup.loadTextProbeTombstones(s, indexDir)
+    val nTombstones = index.tombstones(s, indexDir)
       .map(_.count()).getOrElse(0L)
-    val nServedMd5 = graft.ops.Dedup.loadTextProbeIndex(s, indexDir)
-      .md5s.count()
+    val nServedMd5 = index.serving(s, indexDir).head.count()
     Seq((nArrived, nNew, nTombstones, nServedMd5))
       .toDF("n_arrived", "n_new_tombstones", "n_tombstones_total",
         "n_docs_served")
@@ -68,7 +69,7 @@ object StreamingTakedown {
         // job must not scan the very log generation it is extending
         // through a lazy anti-join (and a replayed wave must observe
         // the log state its crashed attempt left, not a moving one)
-        val newIds = graft.ops.Dedup.loadTextProbeTombstones(s, indexDir)
+        val newIds = index.tombstones(s, indexDir)
           .map(t => arrivals.join(
             t.withColumnRenamed("hist_doc", "doc_id"), Seq("doc_id"),
             "left_anti"))
@@ -77,7 +78,7 @@ object StreamingTakedown {
         val nArrived = arrivals.count()
         val nNew = newIds.count()
         if (nNew > 0L)
-          graft.ops.Dedup.deleteFromTextProbeIndex(newIds, indexDir)
+          index.delete(newIds, indexDir)
         auditBatch(s, indexDir, nArrived, nNew)
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
         ()

@@ -41,8 +41,8 @@ object StreamingVideoDedup {
     * `outDir/batch_id=<n>/`.
     *
     * Durable-index path: an `indexDir` written by
-    * `Multimodal.persistVideoIndex` (plus any `refreshVideoIndex`
-    * appends) replaces `index` entirely — the job starts with NO
+    * `DurableIndex.video` (persist plus any refresh appends) replaces
+    * `index` entirely — the job starts with NO
     * decode pass, aggregating the earliest-carrier probe table
     * straight from the bucketed frame-hash rows on disk (the
     * snapshot-rotation shape at 100 TB; a zero-exchange digest
@@ -52,13 +52,14 @@ object StreamingVideoDedup {
           checkpointDir: String,
           indexDir: Option[String] = None): StreamingQuery = {
     // Disk indexes re-resolve PER BATCH (the shared PerBatchIndex
-    // takedown discipline — deleteFromVideoIndex lands without a
+    // takedown discipline — DurableIndex.video.delete lands without a
     // restart); the per-trigger cost is the zero-exchange digest
     // aggregate over the bucketed rows, never a decode. This also
     // drops the old run-start localCheckpoint, which pinned its
     // blocks for the life of the query with nothing reaping them.
     val resolve = PerBatchIndex.resolver(indexDir,
-      d => graft.ops.Multimodal.loadVideoFrameIndex(newMedia.sparkSession, d),
+      d => graft.ops.Multimodal.frameIndexOf(
+        graft.ops.DurableIndex.video.serving(newMedia.sparkSession, d).head),
       index)
     newMedia.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.CorpusIndexes
+import graft.ops.{CorpusIndexes, Dedup, DurableIndex, Multimodal, Similarity}
 
 /** The DURABLE sidecar layer: `CorpusIndexes.persistSidecars` writes
   * the session sidecars (shingle/token/band/aHash/labels/IVF/PQ) as
@@ -25,8 +26,11 @@ import graft.ops.CorpusIndexes
   *    exchanges (the BucketingSpec discipline on the persisted index).
   *  - SNAPSHOT GUARD: a root whose `_graft_source` marker names a
   *    different corpus dir is ignored — consumers silently rebuild.
-  *  - The streaming probe-index round-trip: the three probe tables
-  *    reloaded from disk give bit-identical multi-signal verdicts.
+  *  - The DURABLE INDEX LIFECYCLE TABLE: every `DurableIndex` family
+  *    (text probe, image, video, audio, IVF, PQ, SRP) passes every
+  *    lifecycle row — refresh, compaction, masked deletes, the fold and
+  *    the re-add guard — plus its family-specific rows.
+  *  - CRASH INJECTION at every filesystem step of the generation swap.
   */
 class SidecarDiskSpec extends AnyFunSuite {
 
@@ -154,209 +158,26 @@ class SidecarDiskSpec extends AnyFunSuite {
   }
 
   test("incremental probe-index refresh equals a from-scratch rebuild, including a cap crossing") {
+    // the lifecycle table proves refresh == rebuild over the corpus;
+    // this is the text family's cap-crossing witness: 40 identical
+    // docs fit under the cap, 30 more identical arrivals push the
+    // shared band keys over 64 — the refreshed load must drop them
+    // exactly like a scratch build
     val s = TestSpark.spark
     import s.implicits._
-    val docs = Tables.documents(s, TestSpark.sfDir).select($"doc_id", $"text")
-    val hist = docs.filter($"doc_id" % 5 =!= 0)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    // day 1: two thirds of the history; day 2: the rest arrives
-    val day1 = hist.filter($"doc_id" % 3 =!= 0)
-    val day2 = hist.filter($"doc_id" % 3 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-inc").toString
-    graft.ops.Dedup.persistTextProbeIndex(day1, dir)
-    graft.ops.Dedup.refreshTextProbeIndex(day2, dir)
-    val refreshed = graft.ops.Dedup.loadTextProbeIndex(s, dir)
-    val scratch = graft.ops.Dedup.buildTextProbeIndex(hist)
-    val a = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch, refreshed)
-      .orderBy($"doc_id"))
-    val b = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch, scratch)
-      .orderBy($"doc_id"))
-    assert(a == b && a.nonEmpty,
-      "refreshed index must probe identically to a from-scratch rebuild")
-
-    // cap crossing: 40 identical docs fit under the cap; 30 more
-    // identical arrivals push the shared band keys over 64 — the
-    // refreshed load must drop them exactly like a scratch build
     val mk = (ids: Range) => ids.map(i =>
       (i.toLong, "the same boilerplate sentence repeated for the cap test"))
       .toDF("doc_id", "text")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-probe-cap").toString
-    graft.ops.Dedup.persistTextProbeIndex(mk(0 until 40), dir2)
-    val before = graft.ops.Dedup.loadTextProbeIndex(s, dir2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-probe-cap").toString
+    Dedup.persistTextProbeIndex(mk(0 until 40), dir)
+    val before = Dedup.loadTextProbeIndex(s, dir)
     assert(before.cappedBands.count() > 0, "under the cap: bands kept")
-    graft.ops.Dedup.refreshTextProbeIndex(mk(40 until 70), dir2)
-    val after = graft.ops.Dedup.loadTextProbeIndex(s, dir2)
+    DurableIndex.textProbe.refresh(mk(40 until 70), dir)
+    val after = Dedup.loadTextProbeIndex(s, dir)
     assert(after.cappedBands.count() == 0,
       "over the cap after the delta: every shared band key must drop")
+    assert(Dedup.buildTextProbeIndex(mk(0 until 70)).cappedBands.count() == 0)
     assert(after.md5s.count() == 70, "md5 store keeps appending")
-  }
-
-  test("probe-index compaction: one file per bucket again, verdicts bit-identical") {
-    val s = TestSpark.spark
-    import s.implicits._
-    val docs = Tables.documents(s, TestSpark.sfDir).select($"doc_id", $"text")
-    val hist = docs.filter($"doc_id" % 5 =!= 0)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val day1 = hist.filter($"doc_id" % 3 === 1)
-    val day2 = hist.filter($"doc_id" % 3 === 2)
-    val day3 = hist.filter($"doc_id" % 3 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-compact").toString
-    graft.ops.Dedup.persistTextProbeIndex(day1, dir)
-    graft.ops.Dedup.refreshTextProbeIndex(day2, dir)
-    graft.ops.Dedup.refreshTextProbeIndex(day3, dir)
-
-    def bucketFiles(key: String): Int =
-      new java.io.File(s"$dir/$key").listFiles()
-        .count(f => f.getName.startsWith("part-"))
-
-    // three append generations: more than one file per bucket
-    assert(bucketFiles("probe_raw_bands") > 8,
-      "fixture must accumulate multiple files per bucket before compaction")
-    val before = graft.ops.Dedup.loadTextProbeIndex(s, dir)
-    val beforeVerdicts = rows(
-      graft.ops.Dedup.multiSignalProbeIndexed(batch, before).orderBy($"doc_id"))
-    val beforeBands = before.cappedBands.count()
-
-    graft.ops.Dedup.compactTextProbeIndex(s, dir)
-
-    Seq("probe_md5s", "probe_raw_bands", "probe_sim_bands").foreach { key =>
-      assert(bucketFiles(key) == 8,
-        s"$key: compaction must restore one file per bucket")
-    }
-    val after = graft.ops.Dedup.loadTextProbeIndex(s, dir)
-    assert(after.cappedBands.count() == beforeBands)
-    val afterVerdicts = rows(
-      graft.ops.Dedup.multiSignalProbeIndexed(batch, after).orderBy($"doc_id"))
-    assert(afterVerdicts == beforeVerdicts && afterVerdicts.nonEmpty,
-      "compaction must not change a single probe verdict")
-  }
-
-  test("streaming probe index round-trips through disk with identical verdicts") {
-    val s = TestSpark.spark
-    import s.implicits._
-    val docs = Tables.documents(s, TestSpark.sfDir).select($"doc_id", $"text")
-    val hist = docs.filter($"doc_id" % 5 =!= 0)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-probeidx").toString
-    graft.ops.Dedup.persistTextProbeIndex(hist, dir)
-    val built = graft.ops.Dedup.buildTextProbeIndex(hist)
-    val loaded = graft.ops.Dedup.loadTextProbeIndex(s, dir)
-    val a = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch, built)
-      .orderBy($"doc_id"))
-    val b = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch, loaded)
-      .orderBy($"doc_id"))
-    assert(a == b, "disk probe index diverged from built probe index")
-    assert(a.nonEmpty)
-  }
-
-  test("probe-index lifecycle: refresh and compact interleave without drift") {
-    val s = TestSpark.spark
-    import s.implicits._
-    val docs = Tables.documents(s, TestSpark.sfDir).select($"doc_id", $"text")
-    val hist = docs.filter($"doc_id" % 5 =!= 0)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val days = (0 to 3).map(k => hist.filter($"doc_id" % 4 === k))
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-life").toString
-    // day 0 snapshot, then: refresh, compact, refresh, compact —
-    // the cadence a quarter of daily crawls actually runs
-    graft.ops.Dedup.persistTextProbeIndex(days(0), dir)
-    graft.ops.Dedup.refreshTextProbeIndex(days(1), dir)
-    graft.ops.Dedup.compactTextProbeIndex(s, dir)
-    graft.ops.Dedup.refreshTextProbeIndex(days(2), dir)
-    graft.ops.Dedup.compactTextProbeIndex(s, dir)
-    graft.ops.Dedup.refreshTextProbeIndex(days(3), dir)
-    val lived = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch,
-      graft.ops.Dedup.loadTextProbeIndex(s, dir)).orderBy($"doc_id"))
-    val scratch = rows(graft.ops.Dedup.multiSignalProbeIndexed(batch,
-      graft.ops.Dedup.buildTextProbeIndex(hist)).orderBy($"doc_id"))
-    assert(lived == scratch && lived.nonEmpty,
-      "interleaved refresh/compact must equal a from-scratch build")
-  }
-
-  test("text probe index deletes: masked serving equals rebuild-minus-deleted; compaction folds physically; re-add guarded until the fold") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import org.apache.spark.sql.functions.lit
-    import graft.ops.Dedup
-    val docs = Tables.documents(s, TestSpark.sfDir).select($"doc_id", $"text")
-    val hist = docs.filter($"doc_id" % 5 =!= 0).localCheckpoint()
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-del").toString
-    Dedup.persistTextProbeIndex(hist, dir)
-    def serve(idx: Dedup.TextProbeIndex) =
-      rows(Dedup.multiSignalProbeIndexed(batch, idx).orderBy($"doc_id"))
-    val before = serve(Dedup.loadTextProbeIndex(s, dir))
-
-    // Take down EMITTED match carriers (half of them) — deleting an id
-    // that some verdict's best_match names guarantees the takedown is
-    // observable, the exact phantom-veto the delete log exists to end.
-    val matched = Dedup.multiSignalProbeIndexed(batch, Dedup.loadTextProbeIndex(s, dir))
-      .filter($"best_match".isNotNull).select($"best_match".as("doc_id"))
-      .distinct().as[Long].collect().sorted
-    assert(matched.nonEmpty, "fixture must emit matches")
-    val deadIds = matched.zipWithIndex.collect { case (id, i) if i % 2 == 0 => id }
-    val dead = deadIds.toSeq.toDF("doc_id")
-    // two waves: the log APPENDS like the index it shadows
-    val mid = deadIds(deadIds.length / 2)
-    Dedup.deleteFromTextProbeIndex(dead.filter($"doc_id" < mid), dir)
-    Dedup.deleteFromTextProbeIndex(dead.filter($"doc_id" >= mid), dir)
-
-    // (a) masked serving == probing a rebuild WITHOUT the deleted docs,
-    // bit for bit — including any band the deletions pull back under
-    // the df cap (the cap re-derives over masked rows).
-    val after = serve(Dedup.loadTextProbeIndex(s, dir))
-    assert(after == serve(Dedup.buildTextProbeIndex(
-      hist.join(dead, Seq("doc_id"), "left_anti"))))
-    assert(after != before, "deleted carrier never served — fixture too weak")
-
-    // (b) a tombstoned doc cannot re-enter through refresh until the
-    // log folds — the serving mask would strand it forever...
-    val deadOne = hist.filter($"doc_id" === deadIds.head).localCheckpoint()
-    intercept[IllegalArgumentException] {
-      Dedup.refreshTextProbeIndex(deadOne, dir)
-    }
-    // ...but a fresh arrival appends fine with the log live.
-    Dedup.refreshTextProbeIndex(
-      deadOne.select(lit(1000001L).as("doc_id"), $"text"), dir)
-    val served2 = serve(Dedup.loadTextProbeIndex(s, dir))
-
-    // (c) compaction folds the log into ALL THREE tables: the log is
-    // cleared, rows physically absent, serving bit-identical.
-    Dedup.compactTextProbeIndex(s, dir)
-    assert(Dedup.loadTextProbeTombstones(s, dir)
-      .map(_.count()).getOrElse(0L) == 0L,
-      "compaction must clear every folded tombstone (only rows appended " +
-        "after the fold's snapshot may survive)")
-    Seq("probe_md5s", "probe_raw_bands", "probe_sim_bands").foreach { key =>
-      val kept = s.read.parquet(s"$dir/$key").select($"hist_doc").as[Long]
-        .collect().toSet
-      assert(kept.intersect(deadIds.toSet).isEmpty,
-        s"$key keeps tombstoned rows after the fold")
-      assert(kept.contains(1000001L) || key != "probe_md5s",
-        s"$key lost the live refresh row")
-    }
-    assert(serve(Dedup.loadTextProbeIndex(s, dir)) == served2,
-      "folding the delete log must not change a single probe verdict")
-
-    // (d) after the fold the id is free again — the re-add rejected in
-    // (b) now lands and serves.
-    Dedup.refreshTextProbeIndex(deadOne, dir)
-    assert(Dedup.loadTextProbeIndex(s, dir).md5s
-      .filter($"hist_doc" === deadIds.head).count() == 1)
-
-    // (e) the emptied log REGENERATES cleanly: a new delete wave after
-    // the fold starts a fresh log generation, masks immediately, and
-    // folds again (the empty-table read/append edge).
-    Dedup.deleteFromTextProbeIndex(Seq(deadIds.head).toDF("doc_id"), dir)
-    assert(Dedup.loadTextProbeIndex(s, dir).md5s
-      .filter($"hist_doc" === deadIds.head).count() == 0,
-      "a post-fold delete must mask immediately")
-    Dedup.compactTextProbeIndex(s, dir)
-    assert(Dedup.loadTextProbeTombstones(s, dir)
-      .map(_.count()).getOrElse(0L) == 0L)
-    assert(s.read.parquet(s"$dir/probe_md5s")
-      .filter($"hist_doc" === deadIds.head).count() == 0,
-      "the second fold must physically remove the re-deleted doc")
   }
 
   test("StreamingDedup honors a takedown between triggers without restart") {
@@ -384,7 +205,7 @@ class SidecarDiskSpec extends AnyFunSuite {
         .select($"best_match").distinct().as[Long].collect()
       assert(carriers.nonEmpty, "fixture must emit matches in batch 0")
       // takedown lands BETWEEN triggers — no restart
-      Dedup.deleteFromTextProbeIndex(carriers.toSeq.toDF("doc_id"), dir)
+      DurableIndex.textProbe.delete(carriers.toSeq.toDF("doc_id"), dir)
       input.addData(probeSlice.toSeq) // the SAME docs re-probe
       q.processAllAvailable()
       val b1 = spark.read.parquet(s"$out/batch_id=1")
@@ -398,59 +219,6 @@ class SidecarDiskSpec extends AnyFunSuite {
       assert(b1.count() == expect.count())
       assert(b1.except(expect).count() == 0 && expect.except(b1).count() == 0)
     } finally q.stop()
-  }
-
-  test("image index deletes: masked serving equals rebuild-minus-deleted; fold at compaction; re-add guarded") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Multimodal
-    val pngs = Multimodal.pngTable(s, TestSpark.sfDir)
-    val hist = pngs.filter($"doc_id" % 5 =!= 0)
-    val batch = pngs.filter($"doc_id" % 5 === 0).toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft-iidx-del").toString
-    Multimodal.persistImageIndex(hist, dir)
-    def idx(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", $"ahash_hi", $"ahash_lo")
-    def serve() = rows(Multimodal.imageProbeBatch(batch,
-      idx(Multimodal.loadImageIndex(s, dir))).orderBy($"doc_id"))
-    val before = serve()
-    // take down the emitted dup carriers (every one observable)
-    val carriers = Multimodal.imageProbeBatch(batch,
-        idx(Multimodal.loadImageIndex(s, dir)))
-      .filter($"dup_of".isNotNull).select($"dup_of".as("doc_id")).distinct()
-      .localCheckpoint()
-    assert(carriers.count() > 0, "fixture must emit image dups")
-    Multimodal.deleteFromImageIndex(carriers, dir)
-    val after = serve()
-    assert(after != before, "takedown never served — fixture too weak")
-    // masked serving == rebuild minus deleted: the raw rows minus the
-    // log probe identically (hash rows are per-image, so the rebuild
-    // IS the anti-joined table)
-    val rebuilt = rows(Multimodal.imageProbeBatch(batch,
-      idx(s.read.parquet(s"$dir/png_ahash")
-        .join(carriers, Seq("doc_id"), "left_anti"))).orderBy($"doc_id"))
-    assert(after == rebuilt)
-    // re-add guard until the fold
-    val deadOne = hist.filter($"doc_id".isin(
-      carriers.as[Long].collect().toSeq: _*)).limit(1)
-    intercept[IllegalArgumentException] {
-      Multimodal.refreshImageIndex(deadOne.as[Multimodal.PngRow], dir)
-    }
-    // fold: log cleared, rows physically absent, serving unchanged
-    Multimodal.compactImageIndex(s, dir)
-    assert(Multimodal.loadImageTombstones(s, dir)
-      .map(_.count()).getOrElse(0L) == 0L,
-      "compaction must clear every folded image tombstone")
-    val deadIds = carriers.as[Long].collect().toSet
-    assert(s.read.parquet(s"$dir/png_ahash").select($"doc_id").as[Long]
-      .collect().toSet.intersect(deadIds).isEmpty)
-    assert(serve() == after,
-      "folding the image delete log must not change a single verdict")
-    // after the fold the id is free again
-    Multimodal.refreshImageIndex(deadOne.as[Multimodal.PngRow], dir)
-    val readded = deadOne.select($"doc_id").as[Long].head()
-    assert(Multimodal.loadImageIndex(s, dir)
-      .filter($"doc_id" === readded).count() == 1)
   }
 
   test("an index EMPTIED by takedown stays maintainable and readable (the TombLog property's crash)") {
@@ -470,114 +238,31 @@ class SidecarDiskSpec extends AnyFunSuite {
     val ids = (0L until 8L)
     def media(sel: Seq[Long]) =
       sel.sorted.map(id => (id, Multimodal.PngCodec.encode(id)))
-        .toDF("doc_id", "payload").as[Multimodal.PngRow]
+        .toDF("doc_id", "payload")
     val dir = java.nio.file.Files.createTempDirectory("graft-iidx-empty").toString
-    Multimodal.persistImageIndex(media(ids), dir)
-    Multimodal.deleteFromImageIndex(ids.toDF("doc_id"), dir)
-    assert(Multimodal.loadImageIndex(s, dir).count() == 0L, "all masked")
-    Multimodal.compactImageIndex(s, dir) // folds: zero part files remain
-    Multimodal.compactImageIndex(s, dir) // the crash site: must no-op
-    assert(Multimodal.loadImageIndex(s, dir).count() == 0L)
+    DurableIndex.image.persist(media(ids), dir)
+    DurableIndex.image.delete(ids.toDF("doc_id"), dir)
+    assert(DurableIndex.image.serving(s, dir).head.count() == 0L, "all masked")
+    DurableIndex.image.compact(s, dir) // folds: zero part files remain
+    DurableIndex.image.compact(s, dir) // the crash site: must no-op
+    assert(DurableIndex.image.serving(s, dir).head.count() == 0L)
     // the delete→fold cycle still works against the empty generation
-    Multimodal.deleteFromImageIndex(ids.toDF("doc_id"), dir)
+    DurableIndex.image.delete(ids.toDF("doc_id"), dir)
     intercept[IllegalArgumentException] {
-      Multimodal.refreshImageIndex(media(ids.take(2)), dir)
+      DurableIndex.image.refresh(media(ids.take(2)), dir)
     }
-    Multimodal.compactImageIndex(s, dir)
+    DurableIndex.image.compact(s, dir)
     // a FRESH session has no catalog entry: drop it and prove the
     // empty generation is still readable (schema marker, not footer)
     s.sql(s"DROP TABLE IF EXISTS " +
       CorpusIndexes.tableName(dir, "png_ahash"))
-    assert(Multimodal.loadImageIndex(s, dir).count() == 0L)
-    assert(Multimodal.loadImageIndex(s, dir).columns.contains("ahash_hi"),
+    assert(DurableIndex.image.serving(s, dir).head.count() == 0L)
+    assert(DurableIndex.image.serving(s, dir).head.columns.contains("ahash_hi"),
       "the marker must reproduce the real schema, not a stub")
     // service restores on re-add
-    Multimodal.refreshImageIndex(media(ids.take(3)), dir)
-    assert(Multimodal.loadImageIndex(s, dir).select($"doc_id").as[Long]
+    DurableIndex.image.refresh(media(ids.take(3)), dir)
+    assert(DurableIndex.image.serving(s, dir).head.select($"doc_id").as[Long]
       .collect().toSet == ids.take(3).toSet)
-  }
-
-  test("video and audio index deletes: masked serving equals rebuild-minus-deleted; fold at compaction; re-add guarded") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Multimodal
-    // ---- video: frames mask BEFORE the earliest-carrier aggregate
-    val gifs = Multimodal.gifTable(s, TestSpark.sfDir)
-    val vHist = gifs.filter($"doc_id" % 5 =!= 0)
-    val vBatch = gifs.filter($"doc_id" % 5 === 0).toDF()
-    val vDir = java.nio.file.Files.createTempDirectory("graft-vidx-del").toString
-    Multimodal.persistVideoIndex(vHist, vDir)
-    def vServe() = rows(Multimodal.videoProbeBatch(vBatch,
-      Multimodal.loadVideoFrameIndex(s, vDir)).orderBy($"doc_id"))
-    val vBefore = vServe()
-    val vCarriers = Multimodal.videoProbeBatch(vBatch,
-        Multimodal.loadVideoFrameIndex(s, vDir))
-      .filter($"first_hist".isNotNull).select($"first_hist".as("doc_id"))
-      .distinct().localCheckpoint()
-    assert(vCarriers.count() > 0, "fixture must emit video carriers")
-    Multimodal.deleteFromVideoIndex(vCarriers, vDir)
-    val vAfter = vServe()
-    assert(vAfter != vBefore, "video takedown never served")
-    val vRebuilt = rows(Multimodal.videoProbeBatch(vBatch,
-      Multimodal.frameIndexOf(s.read.parquet(s"$vDir/gif_frames")
-        .join(vCarriers, Seq("doc_id"), "left_anti"))).orderBy($"doc_id"))
-    assert(vAfter == vRebuilt,
-      "masked video serving must equal rebuild-minus-deleted")
-    val vDeadIds = vCarriers.as[Long].collect().toSet
-    val vDeadOne = vHist.filter($"doc_id" === vDeadIds.head)
-    intercept[IllegalArgumentException] {
-      Multimodal.refreshVideoIndex(vDeadOne, vDir)
-    }
-    Multimodal.compactVideoIndex(s, vDir)
-    assert(Multimodal.loadVideoTombstones(s, vDir)
-      .map(_.count()).getOrElse(0L) == 0L)
-    assert(s.read.parquet(s"$vDir/gif_frames").select($"doc_id").as[Long]
-      .collect().toSet.intersect(vDeadIds).isEmpty,
-      "folded video rows must be physically absent")
-    assert(vServe() == vAfter, "video fold must not change a verdict")
-    Multimodal.refreshVideoIndex(vDeadOne, vDir)
-    assert(s.read.parquet(s"$vDir/gif_frames")
-      .filter($"doc_id" === vDeadIds.head).count() > 0,
-      "video re-add after the fold must land")
-
-    // ---- audio: the nearest-neighbor serving path
-    val wavs = Multimodal.wavTable(s, TestSpark.sfDir)
-    val aHist = wavs.filter($"doc_id" % 5 =!= 0)
-    val aBatch = wavs.filter($"doc_id" % 5 === 0).toDF()
-    val aDir = java.nio.file.Files.createTempDirectory("graft-aidx-del").toString
-    Multimodal.persistAudioIndex(aHist, aDir)
-    def aServe() = rows(Multimodal.audioProbeBatch(aBatch,
-      Multimodal.loadAudioIndex(s, aDir)).orderBy($"doc_id"))
-    val aBefore = aServe()
-    val aCarriers = Multimodal.audioProbeBatch(aBatch,
-        Multimodal.loadAudioIndex(s, aDir))
-      .filter($"nn_id".isNotNull).select($"nn_id".as("doc_id"))
-      .distinct().localCheckpoint()
-    assert(aCarriers.count() > 0, "fixture must emit audio neighbors")
-    Multimodal.deleteFromAudioIndex(aCarriers, aDir)
-    val aAfter = aServe()
-    assert(aAfter != aBefore, "audio takedown never served")
-    val aRebuilt = rows(Multimodal.audioProbeBatch(aBatch,
-      s.read.parquet(s"$aDir/wav_fp")
-        .join(aCarriers, Seq("doc_id"), "left_anti")).orderBy($"doc_id"))
-    assert(aAfter == aRebuilt,
-      "masked audio serving must equal rebuild-minus-deleted")
-    val aDeadIds = aCarriers.as[Long].collect().toSet
-    val aDeadOne = aHist.filter($"doc_id" === aDeadIds.head)
-    intercept[IllegalArgumentException] {
-      Multimodal.refreshAudioIndex(aDeadOne, aDir)
-    }
-    Multimodal.compactAudioIndex(s, aDir)
-    assert(Multimodal.loadAudioTombstones(s, aDir)
-      .map(_.count()).getOrElse(0L) == 0L)
-    assert(s.read.parquet(s"$aDir/wav_fp").select($"doc_id").as[Long]
-      .collect().toSet.intersect(aDeadIds).isEmpty,
-      "folded audio rows must be physically absent")
-    assert(aServe() == aAfter, "audio fold must not change a verdict")
-    Multimodal.refreshAudioIndex(aDeadOne, aDir)
-    assert(s.read.parquet(s"$aDir/wav_fp")
-      .filter($"doc_id" === aDeadIds.head).count() > 0,
-      "audio re-add after the fold must land")
   }
 
   test("writeCuratedCorpus ships exactly the d27 survivors, partition-pruned by source") {
@@ -657,8 +342,8 @@ class SidecarDiskSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     import graft.ops.Multimodal
     val idxDir = java.nio.file.Files.createTempDirectory("graft-vidx").toString
-    Multimodal.persistVideoIndex(
-      Multimodal.gifTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0),
+    DurableIndex.video.persist(
+      Multimodal.gifTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0).toDF(),
       idxDir)
     val newRows = Tables.documents(spark, TestSpark.sfDir).select($"doc_id")
       .filter($"doc_id" % 5 === 0).as[Long].collect().sorted
@@ -689,8 +374,8 @@ class SidecarDiskSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     import graft.ops.Multimodal
     val idxDir = java.nio.file.Files.createTempDirectory("graft-iidx").toString
-    Multimodal.persistImageIndex(
-      Multimodal.pngTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0),
+    DurableIndex.image.persist(
+      Multimodal.pngTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0).toDF(),
       idxDir)
     val newRows = Tables.documents(spark, TestSpark.sfDir).select($"doc_id")
       .filter($"doc_id" % 5 === 0).as[Long].collect().sorted
@@ -714,64 +399,6 @@ class SidecarDiskSpec extends AnyFunSuite {
     assert(batchRun.except(streamed).count() == 0)
   }
 
-  test("image index lifecycle: refresh equals from-scratch, compaction restores one file per bucket, verdicts identical") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Multimodal
-    val pngs = Multimodal.pngTable(s, TestSpark.sfDir)
-    val hist = pngs.filter($"doc_id" % 5 =!= 0)
-    val batch = pngs.filter($"doc_id" % 5 === 0).toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft-iidx-life").toString
-    // day 0 persist, then two refresh days — the text-probe cadence
-    Multimodal.persistImageIndex(hist.filter($"doc_id" % 3 === 0), dir)
-    Multimodal.refreshImageIndex(hist.filter($"doc_id" % 3 === 1), dir)
-    Multimodal.refreshImageIndex(hist.filter($"doc_id" % 3 === 2), dir)
-    def idx(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", $"ahash_hi", $"ahash_lo")
-    val scratch = rows(Multimodal.imageProbeBatch(batch,
-      idx(Multimodal.historicalAHashIndex(s, TestSpark.sfDir))).orderBy($"doc_id"))
-    val refreshed = rows(Multimodal.imageProbeBatch(batch,
-      idx(Multimodal.loadImageIndex(s, dir))).orderBy($"doc_id"))
-    assert(refreshed == scratch && refreshed.nonEmpty,
-      "refreshed image index must probe identically to the from-scratch sidecar")
-    def files() = new java.io.File(s"$dir/png_ahash").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8, "three generations must leave more than one file per bucket")
-    Multimodal.compactImageIndex(s, dir)
-    assert(files() == 8, "compaction must restore one file per bucket")
-    val compacted = rows(Multimodal.imageProbeBatch(batch,
-      idx(Multimodal.loadImageIndex(s, dir))).orderBy($"doc_id"))
-    assert(compacted == refreshed,
-      "image index compaction must not change a single verdict")
-  }
-
-  test("video index lifecycle: refresh equals from-scratch, compaction restores one file per bucket, verdicts identical") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Multimodal
-    val gifs = Multimodal.gifTable(s, TestSpark.sfDir)
-    val hist = gifs.filter($"doc_id" % 5 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-vidx-life").toString
-    Multimodal.persistVideoIndex(hist.filter($"doc_id" % 3 === 0), dir)
-    Multimodal.refreshVideoIndex(hist.filter($"doc_id" % 3 === 1), dir)
-    Multimodal.refreshVideoIndex(hist.filter($"doc_id" % 3 === 2), dir)
-    val newSlice = gifs.filter($"doc_id" % 5 === 0).toDF()
-    val scratch = rows(Multimodal.incrementalVideoDedup(s, TestSpark.sfDir))
-    val refreshed = rows(Multimodal.videoProbeBatch(newSlice,
-      Multimodal.loadVideoFrameIndex(s, dir)).orderBy($"doc_id"))
-    assert(refreshed == scratch && refreshed.nonEmpty,
-      "refreshed video index must probe identically to the session sidecar")
-    def files() = new java.io.File(s"$dir/gif_frames").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8, "three generations must leave more than one file per bucket")
-    Multimodal.compactVideoIndex(s, dir)
-    assert(files() == 8, "compaction must restore one file per bucket")
-    val compacted = rows(Multimodal.videoProbeBatch(newSlice,
-      Multimodal.loadVideoFrameIndex(s, dir)).orderBy($"doc_id"))
-    assert(compacted == refreshed,
-      "video index compaction must not change a single verdict")
-  }
-
   test("audio fingerprint sidecar serves m14/m18 from disk: identical results, scan under the root, no WAV decode of the corpus") {
     val base = TestSpark.spark
     val s2 = diskSession()
@@ -791,332 +418,6 @@ class SidecarDiskSpec extends AnyFunSuite {
       "disk-form audio dedup must not re-read (and re-encode) the corpus")
   }
 
-  test("audio index lifecycle: refresh equals from-scratch, compaction restores at most one file per bucket, verdicts identical") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Multimodal
-    val wavs = Multimodal.wavTable(s, TestSpark.sfDir)
-    val hist = wavs.filter($"doc_id" % 5 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-aidx-life").toString
-    Multimodal.persistAudioIndex(hist.filter($"doc_id" % 3 === 0), dir)
-    Multimodal.refreshAudioIndex(hist.filter($"doc_id" % 3 === 1), dir)
-    Multimodal.refreshAudioIndex(hist.filter($"doc_id" % 3 === 2), dir)
-    val newSlice = wavs.filter($"doc_id" % 5 === 0).toDF()
-    val scratch = rows(Multimodal.incrementalAudioDedup(s, TestSpark.sfDir))
-    def probe() = rows(Multimodal.audioProbeBatch(newSlice,
-      Multimodal.loadAudioIndex(s, dir)).orderBy($"doc_id"))
-    val refreshed = probe()
-    assert(refreshed == scratch && refreshed.nonEmpty,
-      "refreshed audio index must probe identically to the session sidecar")
-    def files() = new java.io.File(s"$dir/wav_fp").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8, "three generations must leave more than one file per bucket")
-    Multimodal.compactAudioIndex(s, dir)
-    // n_frames has only 7 distinct values over 8 buckets — an empty
-    // hash bucket writes no file
-    assert(files() <= 8, "compaction must restore at most one file per bucket")
-    assert(probe() == refreshed,
-      "audio index compaction must not change a single verdict")
-  }
-
-  test("IVF index upsert: serve-after-append equals serve-after-rebuild; retrained rebuild agrees on unaffected cells") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Similarity
-    val all = Similarity.normedVectors(s, TestSpark.sfDir)
-    val hist = all.filter($"vec_id" % 7 =!= 2)
-    val arrivals = Tables.embeddings(s, TestSpark.sfDir)
-      .filter($"vec_id" % 7 === 2).select($"vec_id", $"embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-upsert").toString
-    val histIdx = Similarity.assignByCodebook(hist, Similarity.codebookOf(hist))
-    Similarity.persistIvfIndex(histIdx, dir)
-    // TWO refreshes, and the FIRST one appends arrivals with
-    // vec_id < 16 (vecs 2 and 9) — the codebook-pollution trap: the
-    // second refresh must still assign over the FROZEN 14-cell
-    // codebook, not a re-derivation that now sees 16 rows
-    Similarity.refreshIvfIndex(arrivals.filter($"vec_id" < 250), dir)
-    Similarity.refreshIvfIndex(arrivals.filter($"vec_id" >= 250), dir)
-    // the persisted codebook is the historical one, bit for bit, and
-    // is NOT polluted by the appended vec 2/9 rows
-    assert(rows(Similarity.loadIvfCodebook(s, dir).orderBy($"cell_id")) ==
-      rows(Similarity.codebookOf(hist).orderBy($"cell_id")))
-
-    // (a) appended index == frozen-codebook rebuild over the union,
-    // row for row (assignment depends only on the frozen codebook)
-    val appended = Similarity.loadIvfIndex(s, dir)
-      .select($"vec_id", $"cell_id")
-    val frozenRebuild = Similarity.assignByCodebook(all, Similarity.codebookOf(hist))
-      .select($"vec_id", $"cell_id")
-    assert(appended.except(frozenRebuild).count() == 0)
-    assert(frozenRebuild.except(appended).count() == 0)
-    assert(appended.count() == all.count())
-
-    // (b) the serve path sees [index ∪ delta]: probing the loaded
-    // index equals probing the frozen rebuild, bit for bit
-    val queries = Tables.embeddings(s, TestSpark.sfDir)
-      .filter($"vec_id" % 13 === 1)
-      .select($"vec_id".as("q_id"), $"embedding")
-    val frozenCb = Similarity.codebookOf(hist).localCheckpoint()
-    def serve(idx: org.apache.spark.sql.DataFrame) =
-      rows(Similarity.ivfProbeBatch(queries, idx, excludeSelf = false,
-        codebook = Some(frozenCb)).orderBy($"q_id", $"rank"))
-    val servedAppend = serve(Similarity.loadIvfIndex(s, dir))
-    assert(servedAppend == serve(frozenRebuild
-      .join(all, "vec_id").select($"vec_id", $"embedding", $"nrm", $"cell_id")),
-      "serving the appended index must equal serving a frozen-codebook rebuild")
-    assert(servedAppend.nonEmpty)
-    // EVERY query is served under the frozen codebook — with a
-    // polluted (re-derived) codebook a query arg-maxed onto phantom
-    // cell 2/9 would join no index row and silently vanish
-    val nQueries = queries.count()
-    assert(Similarity.ivfProbeBatch(queries, Similarity.loadIvfIndex(s, dir),
-        excludeSelf = false, codebook = Some(Similarity.loadIvfCodebook(s, dir)))
-      .select($"q_id").distinct().count() == nQueries,
-      "a query vanished from serving — codebook not frozen")
-
-    // (c) vs the RETRAINED full rebuild (16-cell codebook): for query
-    // cells no retrained-vs-frozen assignment change touches, results
-    // are identical
-    val retrained = Similarity.ivfIndex(s, TestSpark.sfDir)
-    val moved = Similarity.loadIvfIndex(s, dir).select($"vec_id", $"cell_id")
-      .join(retrained.select($"vec_id", $"cell_id".as("r_cell")), "vec_id")
-      .filter($"cell_id" =!= $"r_cell")
-    val touched = moved.select($"cell_id").union(moved.select($"r_cell"))
-      .distinct().as[Long].collect().toSet
-    val fromAppend = Similarity.ivfProbeBatchWithCell(queries,
-        Similarity.loadIvfIndex(s, dir), excludeSelf = false,
-        codebook = Some(frozenCb))
-      .filter(!$"q_cell".isin(touched.toSeq: _*)).drop("q_cell")
-    val fromRetrain = Similarity.ivfProbeBatchWithCell(queries, retrained,
-        excludeSelf = false)
-      .filter(!$"q_cell".isin(touched.toSeq: _*)).drop("q_cell")
-    assert(rows(fromAppend.orderBy($"q_id", $"rank")) ==
-      rows(fromRetrain.orderBy($"q_id", $"rank")),
-      "unaffected cells must serve identically under append and retrain")
-
-    // compaction after the upsert: file count restored, serving unchanged
-    def files() = new java.io.File(s"$dir/ivf_assigned").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8)
-    Similarity.compactIvfIndex(s, dir)
-    // at most one file per bucket — cell_id has only ~16 distinct
-    // values, so a hash bucket can be empty and write no file
-    assert(files() <= 8, "compaction must restore at most one file per bucket")
-    assert(serve(Similarity.loadIvfIndex(s, dir)) == servedAppend,
-      "compaction must not change a single served neighbor")
-  }
-
-  test("IVF index deletes: masked serving equals rebuild-minus-deleted; compaction folds physically; re-add guarded until the fold") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Similarity
-    val all = Similarity.normedVectors(s, TestSpark.sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-del").toString
-    val idx0 = Similarity.assignByCodebook(all, Similarity.codebookOf(all))
-      .localCheckpoint()
-    Similarity.persistIvfIndex(idx0, dir)
-    val cb = Similarity.loadIvfCodebook(s, dir).localCheckpoint()
-    val queries = Tables.embeddings(s, TestSpark.sfDir)
-      .filter($"vec_id" % 13 === 1)
-      .select($"vec_id".as("q_id"), $"embedding")
-    def serve(idx: org.apache.spark.sql.DataFrame) =
-      rows(Similarity.ivfProbeBatch(queries, idx, excludeSelf = false,
-        codebook = Some(cb)).orderBy($"q_id", $"rank"))
-    val before = serve(Similarity.loadIvfIndexServing(s, dir))
-
-    // Two delete waves (the log APPENDS like the index it shadows).
-    val dead = all.filter($"vec_id" % 11 === 3)
-    Similarity.deleteFromIvfIndex(
-      dead.filter($"vec_id" < 250).select($"vec_id"), dir)
-    Similarity.deleteFromIvfIndex(
-      dead.filter($"vec_id" >= 250).select($"vec_id"), dir)
-
-    // (a) masked serving == serving a rebuild WITHOUT the deleted rows,
-    // bit for bit — and the deletes really changed some neighbor.
-    val after = serve(Similarity.loadIvfIndexServing(s, dir))
-    assert(after == serve(idx0.filter($"vec_id" % 11 =!= 3)))
-    assert(after != before, "delete slice never served — fixture too weak")
-
-    // (b) the streaming serve path masks too (empty delta root).
-    val emptyDelta = java.nio.file.Files.createTempDirectory("graft-ivf-del-d").toString
-    assert(serve(graft.streaming.StreamingAnnIngest.servingIndex(s, dir, emptyDelta))
-      == after)
-
-    // (c) a tombstoned id cannot come back through refresh until the
-    // log folds — the mask would strand the re-added row forever.
-    val deadOne = idx0.filter($"vec_id" % 11 === 3)
-      .orderBy($"vec_id").limit(1).select($"vec_id", $"embedding")
-      .localCheckpoint()
-    intercept[IllegalArgumentException] {
-      Similarity.refreshIvfIndex(deadOne, dir)
-    }
-    // ...but a fresh arrival appends fine with the log live.
-    val fresh = Tables.embeddings(s, TestSpark.sfDir).filter($"vec_id" === 1)
-      .select(org.apache.spark.sql.functions.lit(100001L).as("vec_id"), $"embedding")
-    Similarity.refreshIvfIndex(fresh, dir)
-    val served2 = serve(Similarity.loadIvfIndexServing(s, dir))
-    val ids2 = Similarity.loadIvfIndexServing(s, dir)
-      .select($"vec_id").as[Long].collect().toSet
-    assert(ids2.contains(100001L))
-    assert(!ids2.exists(id => id % 11 == 3 && id < 100000L))
-
-    // (d) compaction folds the log: deleted rows physically absent
-    // from the raw files, the log cleared, serving bit-identical.
-    Similarity.compactIvfIndex(s, dir)
-    assert(Similarity.loadIvfTombstones(s, dir)
-      .map(_.count()).getOrElse(0L) == 0L,
-      "compaction must clear every folded tombstone (only rows appended " +
-        "after the fold's snapshot may survive)")
-    val physical = s.read.parquet(s"$dir/ivf_assigned")
-    assert(physical.filter($"vec_id" % 11 === 3 && $"vec_id" < 100000L).count() == 0,
-      "tombstoned rows must be physically absent after the fold")
-    assert(physical.filter($"vec_id" === 100001L).count() == 1)
-    assert(serve(Similarity.loadIvfIndexServing(s, dir)) == served2,
-      "folding the delete log must not change a single served neighbor")
-
-    // (e) after the fold the id is free again — the re-add that was
-    // rejected in (c) now lands and serves.
-    Similarity.refreshIvfIndex(deadOne, dir)
-    val deadId = deadOne.select($"vec_id").as[Long].head()
-    assert(Similarity.loadIvfIndexServing(s, dir)
-      .filter($"vec_id" === deadId).count() == 1)
-  }
-
-  test("PQ and SRP delete logs: masked serving, physical fold at compaction, re-add guarded until the fold") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import org.apache.spark.sql.DataFrame
-    import graft.ops.Similarity
-    val vecs = Tables.embeddings(s, TestSpark.sfDir)
-      .select($"vec_id", $"embedding").localCheckpoint()
-    // One delete-log contract, three logs: the IVF test above proves
-    // the serving semantics in depth; this drives the SAME lifecycle
-    // through the other two durable families.
-    case class Fam(name: String, persist: String => Unit,
-                   del: (DataFrame, String) => Unit,
-                   serve: String => DataFrame,
-                   refresh: (DataFrame, String) => Unit,
-                   compact: String => Unit, dataSub: String,
-                   tombs: String => Option[DataFrame])
-    val fams = Seq(
-      Fam("pq", d => Similarity.persistPqIndex(vecs, d),
-        Similarity.deleteFromPqIndex, d => Similarity.loadPqIndexServing(s, d),
-        Similarity.refreshPqIndex, d => Similarity.compactPqIndex(s, d),
-        "pq_codes", d => Similarity.loadPqTombstones(s, d)),
-      Fam("srp", d => Similarity.persistSrpIndex(vecs, d),
-        Similarity.deleteFromSrpIndex, d => Similarity.loadSrpIndexServing(s, d),
-        Similarity.refreshSrpIndex, d => Similarity.compactSrpIndex(s, d),
-        "srp_sigs", d => Similarity.loadSrpTombstones(s, d)))
-    fams.foreach { f =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-${f.name}-del").toString
-      f.persist(dir)
-      val dead = vecs.filter($"vec_id" % 11 === 3).select($"vec_id")
-      f.del(dead.filter($"vec_id" < 250), dir)
-      f.del(dead.filter($"vec_id" >= 250), dir)
-      val ids = f.serve(dir).select($"vec_id").as[Long].collect().toSet
-      assert(ids.nonEmpty && !ids.exists(_ % 11 == 3),
-        s"${f.name}: tombstoned ids still served")
-      val deadOne = vecs.filter($"vec_id" % 11 === 3)
-        .orderBy($"vec_id").limit(1).localCheckpoint()
-      intercept[IllegalArgumentException] { f.refresh(deadOne, dir) }
-      f.compact(dir)
-      assert(f.tombs(dir).map(_.count()).getOrElse(0L) == 0L,
-        s"${f.name}: compaction must clear every folded tombstone")
-      val phys = s.read.parquet(s"$dir/${f.dataSub}")
-        .select($"vec_id").as[Long].collect().toSet
-      assert(phys == ids, s"${f.name}: fold must leave exactly the served rows")
-      f.refresh(deadOne, dir)
-      val deadId = deadOne.select($"vec_id").as[Long].head()
-      assert(f.serve(dir).filter($"vec_id" === deadId).count() == 1,
-        s"${f.name}: re-add after the fold must serve")
-    }
-  }
-
-  test("SRP index upsert: append equals from-scratch for ALL queries; compaction invisible; nothing but the delta hashed") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft-srp-upsert").toString
-    val emb = Tables.embeddings(s, TestSpark.sfDir).select($"vec_id", $"embedding")
-    val hist = emb.filter($"vec_id" % 7 =!= 2)
-    val arrivals = emb.filter($"vec_id" % 7 === 2)
-    Similarity.persistSrpIndex(hist, dir)
-    Similarity.refreshSrpIndex(arrivals, dir)
-
-    // (a) appended == from-scratch signatures of the union, row for row
-    // — the frozen md5 seed makes this exact for EVERY row, with no
-    // codebook/model table read anywhere in the refresh
-    val appended = Similarity.loadSrpIndex(s, dir)
-    val scratch = Similarity.srpSignatures(emb)
-    assert(appended.except(scratch).count() == 0)
-    assert(scratch.except(appended).count() == 0)
-    assert(appended.count() == emb.count())
-
-    // (b) Hamming serving over the loaded index equals serving over
-    // the from-scratch signatures, bit for bit, for every query
-    val queries = Similarity.srpSignatures(emb.filter($"vec_id" % 13 === 1))
-      .toDF("q_id", "q_sig")
-    def serve(idx: DataFrame) =
-      rows(Similarity.srpProbe(idx, queries, k = 8))
-    val servedAppend = serve(Similarity.loadSrpIndex(s, dir))
-    assert(servedAppend == serve(scratch))
-    assert(servedAppend.nonEmpty)
-
-    // (c) compaction: bucket layout restored, serving unchanged
-    def files() = new java.io.File(s"$dir/srp_sigs").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8)
-    Similarity.compactSrpIndex(s, dir)
-    assert(files() <= 8, "compaction must restore at most one file per bucket")
-    assert(serve(Similarity.loadSrpIndex(s, dir)) == servedAppend,
-      "compaction must not change a single served neighbor")
-
-    // (d) the registered s26 equals probing the persisted historical
-    // slice with the arrival signatures — the disk form of the query
-    val histDisk = java.nio.file.Files.createTempDirectory("graft-srp-hist").toString
-    Similarity.persistSrpIndex(hist, histDisk)
-    val arrSigs = Similarity.srpSignatures(arrivals).toDF("q_id", "q_sig")
-    assert(rows(Similarity.srpProbe(Similarity.loadSrpIndex(s, histDisk), arrSigs, k = 8))
-      == rows(Similarity.srpUpsertServe(s, TestSpark.sfDir)))
-  }
-
-  test("PQ index upsert: encode-after-append equals frozen rebuild; ADC serving over index ∪ delta identical; compaction invisible") {
-    val s = TestSpark.spark
-    import s.implicits._
-    import graft.ops.Similarity
-    val all = Tables.embeddings(s, TestSpark.sfDir).select($"vec_id", $"embedding")
-    val hist = all.filter($"vec_id" % 7 =!= 2)
-    val arrivals = all.filter($"vec_id" % 7 === 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-upsert").toString
-    Similarity.persistPqIndex(hist, dir)
-    Similarity.refreshPqIndex(arrivals, dir)
-
-    // the persisted codebook is the historical one, frozen
-    val cbHist = Similarity.loadPqCodebook(s, dir)
-    val appended = Similarity.loadPqIndex(s, dir)
-    val frozenRebuild = Similarity.pqEncodeWith(all, cbHist)
-    assert(appended.count() == all.count())
-    assert(appended.except(frozenRebuild).count() == 0)
-    assert(frozenRebuild.except(appended).count() == 0)
-
-    // ADC serving over [index ∪ delta] through the LOAD path equals
-    // serving the frozen rebuild — and survives compaction untouched
-    val queries = all.filter($"vec_id" % 13 === 1)
-    def serve(codes: org.apache.spark.sql.DataFrame) =
-      rows(Similarity.pqServeShortlist(queries, codes, cbHist)
-        .orderBy($"q_id", $"srank"))
-    val served = serve(Similarity.loadPqIndex(s, dir))
-    assert(served == serve(frozenRebuild) && served.nonEmpty,
-      "serving the appended PQ index must equal serving a frozen-codebook rebuild")
-    def files() = new java.io.File(s"$dir/pq_codes").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files() > 8)
-    Similarity.compactPqIndex(s, dir)
-    assert(files() == 8, "compaction must restore one file per bucket")
-    assert(serve(Similarity.loadPqIndex(s, dir)) == served,
-      "PQ compaction must not change a single shortlist row")
-  }
-
   test("StreamingAnn serves the upserted sidecar without a rebuild, equal to the batch probe") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -1127,9 +428,8 @@ class SidecarDiskSpec extends AnyFunSuite {
     val arrivals = Tables.embeddings(spark, TestSpark.sfDir)
       .filter($"vec_id" % 7 === 2).select($"vec_id", $"embedding")
     val root = java.nio.file.Files.createTempDirectory("graft-ann-upsert").toString
-    Similarity.persistIvfIndex(
-      Similarity.assignByCodebook(hist, Similarity.codebookOf(hist)), root)
-    Similarity.refreshIvfIndex(arrivals, root)
+    DurableIndex.ivf.persist(hist, root)
+    DurableIndex.ivf.refresh(arrivals, root)
     val queries = Tables.embeddings(spark, TestSpark.sfDir)
       .filter($"vec_id" % 13 === 1)
       .select($"vec_id".as("q_id"), $"embedding")
@@ -1149,7 +449,7 @@ class SidecarDiskSpec extends AnyFunSuite {
     val batchRun = Similarity.ivfProbeBatch(
       Tables.embeddings(spark, TestSpark.sfDir).filter($"vec_id" % 13 === 1)
         .select($"vec_id".as("q_id"), $"embedding"),
-      Similarity.loadIvfIndex(spark, root))
+      DurableIndex.ivf.raw(spark, root).head)
     assert(streamed.count() == batchRun.count() && streamed.count() > 0)
     assert(streamed.except(batchRun).count() == 0)
     assert(batchRun.except(streamed).count() == 0)
@@ -1235,6 +535,298 @@ class SidecarDiskSpec extends AnyFunSuite {
     assert(after == before && after.nonEmpty,
       "sidecar compaction must be invisible to consumers")
   }
+
+  // ---- the durable-index lifecycle table ----------------------------
+  // Every family in `families` runs every row. The lifecycle group:
+  // (1) refresh equals a rebuild, through the interleaved
+  // persist/refresh/compact/refresh cadence a crawl campaign runs;
+  // (2) compaction restores one file per bucket with serving unchanged.
+  // The delete group: (3) masked serving equals rebuild-minus-deleted;
+  // (4) the fold removes rows physically and clears EXACTLY the folded
+  // log rows (a delete landing mid-fold survives it); (5) re-add is
+  // refused until the fold, and a post-fold delete starts a fresh log
+  // that masks at once and folds again. "Rebuild" is the family's own
+  // row function over the arrivals with the root's frozen model, and
+  // the comparison covers the served tables AND the family's serving
+  // view. Family-specific rows ride along as extras; each group's test
+  // name is the table's label for it.
+
+  private case class Fam(
+      index: DurableIndex,
+      arrivals: SparkSession => DataFrame,
+      lifecycleTest: String,
+      deletesTest: String,
+      view: Seq[DataFrame] => Seq[DataFrame] = _ => Nil,
+      lifecycleExtra: (String, DataFrame) => Unit = (_, _) => (),
+      deletesExtra: (String, DataFrame) => Unit = (_, _) => ())
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix.replace(' ', '-')).toString
+
+  private def snap(frames: Seq[DataFrame]): Seq[Seq[String]] =
+    frames.map(df => rows(df).sorted)
+
+  /** Row-set equality that reports sizes, not the rows themselves. */
+  private def assertSame(got: Seq[Seq[String]], want: Seq[Seq[String]],
+                         what: String): Unit = {
+    val same = got == want
+    assert(same, s"$what: ${got.map(_.size)} rows vs ${want.map(_.size)}, " +
+      s"${got.zip(want).map { case (g, w) => g.diff(w).size }} differ")
+  }
+
+  private def served(f: Fam, root: String): Seq[Seq[String]] = {
+    val ts = f.index.serving(TestSpark.spark, root)
+    snap(ts ++ f.view(ts))
+  }
+
+  private def rebuilt(f: Fam, arrivals: DataFrame, root: String): Seq[Seq[String]] = {
+    val ts = f.index.rows(arrivals, root)
+    snap(ts ++ f.view(ts))
+  }
+
+  private def idSet(df: DataFrame, c: String): Set[Long] =
+    df.select(c).collect().map(_.getLong(0)).toSet
+
+  /** Part files per bucket id, for each data table of the root. */
+  private def filesPerBucket(f: Fam, root: String): Seq[Map[String, Int]] =
+    f.index.tables.map { case (key, _) =>
+      new java.io.File(s"$root/$key").listFiles().map(_.getName)
+        .filter(_.startsWith("part-"))
+        .groupBy(n => "_(\\d+)\\.c\\d+".r.findFirstMatchIn(n).get.group(1))
+        .map { case (b, fs) => b -> fs.length }
+    }
+
+  private def lifecycleRows(f: Fam): Unit = {
+    val s = TestSpark.spark
+    val all = f.arrivals(s).localCheckpoint()
+    // day 0 is the model's corpus; days 1 and 2 both carry seed ids
+    // (< 16) — the codebook-pollution trap for the IVF/PQ families
+    val id = col(f.index.idCol)
+    def day(k: Int) =
+      if (k == 0) all.filter(id % 7 =!= 2) else all.filter(id % 7 === 2 && id % 2 === k - 1)
+    val root = tmp(s"graft-life-${f.index.name}")
+    f.index.persist(day(0), root)
+    f.index.refresh(day(1), root)
+    f.index.compact(s, root)
+    f.index.refresh(day(2), root)
+    val want = rebuilt(f, all, root)
+    assert(want.forall(_.nonEmpty), s"${f.index.name}: empty fixture")
+    assertSame(served(f, root), want,
+      s"${f.index.name}: refresh/compact/refresh must equal a rebuild")
+    assert(filesPerBucket(f, root).forall(_.values.exists(_ > 1)),
+      s"${f.index.name}: fixture must leave several files in some bucket")
+    f.index.compact(s, root)
+    assert(filesPerBucket(f, root).forall(_.values.forall(_ == 1)),
+      s"${f.index.name}: compaction must restore one file per bucket")
+    assertSame(served(f, root), want,
+      s"${f.index.name}: compaction must not change a served row")
+    f.lifecycleExtra(root, day(0))
+  }
+
+  private def deleteRows(f: Fam): Unit = {
+    val s = TestSpark.spark
+    val id = col(f.index.idCol)
+    val name = f.index.name
+    val all = f.arrivals(s).localCheckpoint()
+    val root = tmp(s"graft-del-$name")
+    f.index.persist(all, root)
+    val dead = all.filter(id % 11 === 3).select(id).localCheckpoint()
+    val deadIds = idSet(dead, f.index.idCol)
+    // two waves: the log APPENDS like the index it shadows
+    f.index.delete(dead.filter(id % 2 === 0), root)
+    f.index.delete(dead.filter(id % 2 === 1), root)
+    val live = all.join(dead, Seq(f.index.idCol), "left_anti")
+    assertSame(served(f, root), rebuilt(f, live, root),
+      s"$name: masked serving must equal rebuild-minus-deleted")
+    val observable = served(f, root) != rebuilt(f, all, root)
+    assert(observable, s"$name: deletes never served")
+
+    // a tombstoned id cannot re-enter before the fold
+    val deadOne = all.filter(id === 3L)
+    intercept[IllegalArgumentException](f.index.refresh(deadOne, root))
+
+    // the fold, with a delete landing after its log snapshot was pinned
+    var lateLanded = false
+    CorpusIndexes.crashHook = pt => if (pt == "tmp-written" && !lateLanded) {
+      lateLanded = true
+      f.index.delete(all.filter(id === 5L), root)
+    }
+    try f.index.compact(s, root) finally CorpusIndexes.crashHook = _ => ()
+    assert(lateLanded)
+    f.index.tables.foreach { case (key, _) =>
+      val kept = idSet(s.read.parquet(s"$root/$key"), f.index.keyCol)
+      assert(kept.intersect(deadIds).isEmpty, s"$name: $key keeps folded rows")
+      assert(kept.contains(5L), s"$name: $key folded the late delete")
+    }
+    assert(f.index.tombstones(s, root).map(idSet(_, f.index.keyCol)) == Some(Set(5L)),
+      s"$name: the fold must clear exactly the folded log rows")
+    val live2 = live.filter(id =!= 5L)
+    assertSame(served(f, root), rebuilt(f, live2, root),
+      s"$name: the fold must not change a served row")
+
+    // after the fold the id is free again
+    f.index.refresh(deadOne, root)
+    assertSame(served(f, root), rebuilt(f, live2.union(deadOne), root),
+      s"$name: the re-add must land and serve")
+    // a post-fold delete starts a fresh log, masks at once, folds again
+    f.index.compact(s, root)
+    assert(f.index.tombstones(s, root).isEmpty)
+    f.index.delete(deadOne, root)
+    assertSame(served(f, root), rebuilt(f, live2, root),
+      s"$name: a post-fold delete must mask immediately")
+    f.index.compact(s, root)
+    f.index.tables.foreach { case (key, _) =>
+      assert(!idSet(s.read.parquet(s"$root/$key"), f.index.keyCol).contains(3L),
+        s"$name: the second fold must remove the re-deleted rows from $key")
+    }
+    f.deletesExtra(root, all)
+  }
+
+  private def docs(s: SparkSession) =
+    Tables.documents(s, TestSpark.sfDir).select("doc_id", "text")
+  private def vecs(s: SparkSession) =
+    Tables.embeddings(s, TestSpark.sfDir).select("vec_id", "embedding")
+  private def vecQueries(s: SparkSession) =
+    vecs(s).filter(col("vec_id") % 13 === 1).toDF("q_id", "embedding")
+
+  /** IVF: the codebook stays day 0's through refreshes that append seed
+    * ids (< 16), every query is served under it, and cells no
+    * retrained-vs-frozen assignment change touches serve identically
+    * under the retrained full rebuild.
+    */
+  private def ivfCodebookRows(root: String, day0: DataFrame): Unit = {
+    val s = TestSpark.spark
+    import s.implicits._
+    val fresh = tmp("graft-ivf-day0")
+    DurableIndex.ivf.persist(day0, fresh)
+    val cb = Similarity.ivfCodebook(s, root).localCheckpoint()
+    assert(rows(cb.orderBy($"cell_id")) ==
+      rows(Similarity.ivfCodebook(s, fresh).orderBy($"cell_id")),
+      "refreshes must not unfreeze the persisted codebook")
+    val index = DurableIndex.ivf.serving(s, root).head
+    val queries = vecQueries(s)
+    assert(Similarity.ivfProbeBatch(queries, index, excludeSelf = false,
+        codebook = Some(cb)).select($"q_id").distinct().count() == queries.count(),
+      "a query vanished from serving — codebook not frozen")
+    val retrained = Similarity.ivfIndex(s, TestSpark.sfDir)
+    val moved = index.select($"vec_id", $"cell_id")
+      .join(retrained.select($"vec_id", $"cell_id".as("r_cell")), "vec_id")
+      .filter($"cell_id" =!= $"r_cell")
+    val touched = moved.select($"cell_id").union(moved.select($"r_cell"))
+      .distinct().as[Long].collect().toSeq
+    def untouched(df: DataFrame) =
+      rows(df.filter(!$"q_cell".isin(touched: _*)).drop("q_cell").orderBy($"q_id", $"rank"))
+    val fromFrozen = untouched(Similarity.ivfProbeBatchWithCell(queries, index,
+      excludeSelf = false, codebook = Some(cb)))
+    assert(fromFrozen == untouched(
+      Similarity.ivfProbeBatchWithCell(queries, retrained, excludeSelf = false)),
+      "unaffected cells must serve identically under append and retrain")
+  }
+
+  /** IVF: the streaming ingest door's serving view masks deletes too. */
+  private def ivfIngestMasks(root: String, all: DataFrame): Unit = {
+    val s = TestSpark.spark
+    val emptyDelta = tmp("graft-ivf-del-d")
+    assertSame(snap(Seq(graft.streaming.StreamingAnnIngest.servingIndex(s, root, emptyDelta))),
+      snap(DurableIndex.ivf.serving(s, root)), "IVF ingest-door serving")
+  }
+
+  /** PQ: the codebook stays day 0's, and ADC serving over the refreshed
+    * codes equals serving the frozen rebuild.
+    */
+  private def pqCodebookRows(root: String, day0: DataFrame): Unit = {
+    val s = TestSpark.spark
+    import s.implicits._
+    val fresh = tmp("graft-pq-day0")
+    DurableIndex.pq.persist(day0, fresh)
+    val cb = Similarity.pqCodebook(s, root)
+    assert(rows(cb.orderBy($"m", $"k")) ==
+      rows(Similarity.pqCodebook(s, fresh).orderBy($"m", $"k")),
+      "refreshes must not touch the persisted codebook")
+    def serve(codes: DataFrame) = rows(Similarity.pqServeShortlist(
+      vecs(s).filter($"vec_id" % 13 === 1), codes, cb).orderBy($"q_id", $"srank"))
+    val served = serve(DurableIndex.pq.serving(s, root).head)
+    assert(served.nonEmpty)
+    assertSame(Seq(served), Seq(serve(DurableIndex.pq.rows(vecs(s), root).head)),
+      "PQ ADC serving over the refreshed codes")
+  }
+
+  /** SRP: the registered s26 equals probing a persisted historical slice
+    * with the arrival signatures — the disk form of the query.
+    */
+  private def srpRegisteredRow(root: String, day0: DataFrame): Unit = {
+    val s = TestSpark.spark
+    import s.implicits._
+    val histDisk = tmp("graft-srp-hist")
+    DurableIndex.srp.persist(vecs(s).filter($"vec_id" % 7 =!= 2), histDisk)
+    val arrSigs = Similarity.srpSignatures(vecs(s).filter($"vec_id" % 7 === 2))
+      .toDF("q_id", "q_sig")
+    assert(rows(Similarity.srpProbe(DurableIndex.srp.serving(s, histDisk).head, arrSigs, k = 8))
+      == rows(Similarity.srpUpsertServe(s, TestSpark.sfDir)))
+  }
+
+  /** Video: deleting an earliest carrier promotes the next-earliest one
+    * (the aggregate runs over masked rows, not over a masked aggregate).
+    */
+  private def videoPromotionRow(root: String, all: DataFrame): Unit = {
+    val s = TestSpark.spark
+    def carriers(frames: DataFrame) = Multimodal.frameIndexOf(frames).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val before = carriers(DurableIndex.video.rows(all, root).head)
+    val after = carriers(DurableIndex.video.serving(s, root).head)
+    assert(after.exists { case (d, c) => before.get(d).exists(_ < c) },
+      "no deleted carrier was promoted to the next-earliest")
+  }
+
+  private val families = Seq(
+    Fam(DurableIndex.textProbe, docs,
+      "probe-index lifecycle: refresh and compact interleave without drift",
+      "text probe index deletes: masked serving equals rebuild-minus-deleted; " +
+        "compaction folds physically; re-add guarded until the fold",
+      view = ts => Seq(Dedup.textProbeView(ts).cappedBands)),
+    Fam(DurableIndex.image, s => Multimodal.pngTable(s, TestSpark.sfDir).toDF(),
+      "image index lifecycle: refresh equals from-scratch, compaction restores " +
+        "one file per bucket, verdicts identical",
+      "image index deletes: masked serving equals rebuild-minus-deleted; " +
+        "fold at compaction; re-add guarded"),
+    Fam(DurableIndex.video, s => Multimodal.gifTable(s, TestSpark.sfDir).toDF(),
+      "video index lifecycle: refresh equals from-scratch, compaction restores " +
+        "one file per bucket, verdicts identical",
+      "video and audio index deletes: masked serving equals rebuild-minus-deleted; " +
+        "fold at compaction; re-add guarded",
+      view = ts => Seq(Multimodal.frameIndexOf(ts.head)),
+      deletesExtra = videoPromotionRow),
+    Fam(DurableIndex.audio, s => Multimodal.wavTable(s, TestSpark.sfDir).toDF(),
+      "audio index lifecycle: refresh equals from-scratch, compaction restores " +
+        "at most one file per bucket, verdicts identical",
+      "video and audio index deletes: masked serving equals rebuild-minus-deleted; " +
+        "fold at compaction; re-add guarded"),
+    Fam(DurableIndex.ivf, vecs,
+      "IVF index upsert: serve-after-append equals serve-after-rebuild; " +
+        "retrained rebuild agrees on unaffected cells",
+      "IVF index deletes: masked serving equals rebuild-minus-deleted; " +
+        "compaction folds physically; re-add guarded until the fold",
+      lifecycleExtra = ivfCodebookRows, deletesExtra = ivfIngestMasks),
+    Fam(DurableIndex.pq, vecs,
+      "PQ index upsert: encode-after-append equals frozen rebuild; ADC serving " +
+        "over index ∪ delta identical; compaction invisible",
+      "PQ and SRP delete logs: masked serving, physical fold at compaction, " +
+        "re-add guarded until the fold",
+      lifecycleExtra = pqCodebookRows),
+    Fam(DurableIndex.srp, vecs,
+      "SRP index upsert: append equals from-scratch for ALL queries; compaction " +
+        "invisible; nothing but the delta hashed",
+      "PQ and SRP delete logs: masked serving, physical fold at compaction, " +
+        "re-add guarded until the fold",
+      lifecycleExtra = srpRegisteredRow))
+
+  private def register(label: Fam => String)(run: Fam => Unit): Unit =
+    families.map(label).distinct.foreach { name =>
+      test(name)(families.filter(label(_) == name).foreach(run))
+    }
+  register(_.lifecycleTest)(lifecycleRows)
+  register(_.deletesTest)(deleteRows)
+
 
   // ---- crash injection for the generation-swap windows (round 20) --
   // The swap protocol's crash-safety was argued in doc comments and
@@ -1369,18 +961,18 @@ class SidecarDiskSpec extends AnyFunSuite {
     assert(matched.nonEmpty, "fixture must emit matches")
     val dead = matched.zipWithIndex.collect { case (id, i) if i % 2 == 0 => id }
       .toSeq.toDF("doc_id")
-    Dedup.deleteFromTextProbeIndex(dead, dir)
+    DurableIndex.textProbe.delete(dead, dir)
     val masked = serve() // tombstones masked at read; the fold must preserve this
     // kill the fold between the two renames of the FIRST rewritten
     // table — the worst window: that table's live dir is missing, the
     // other tables are still unfolded, and the log still holds rows
     withCrashAt("live-aside") {
-      Dedup.compactTextProbeIndex(s, dir)
+      DurableIndex.textProbe.compact(s, dir)
     }
     // the next maintenance call heals the half-swapped table, re-runs
     // the fold across all tables, and clears the log
-    Dedup.compactTextProbeIndex(s, dir)
-    assert(Dedup.loadTextProbeTombstones(s, dir)
+    DurableIndex.textProbe.compact(s, dir)
+    assert(DurableIndex.textProbe.tombstones(s, dir)
       .map(_.count()).getOrElse(0L) == 0L,
       "the re-run fold must clear every folded tombstone")
     assert(serve() == masked,
@@ -1413,7 +1005,7 @@ class SidecarDiskSpec extends AnyFunSuite {
       .distinct().as[Long].collect().sorted
     assert(matched.nonEmpty, "fixture must emit matches")
     val dead = matched.take(math.max(1, matched.length / 2)).toSeq.toDF("doc_id")
-    Dedup.deleteFromTextProbeIndex(dead, dir)
+    DurableIndex.textProbe.delete(dead, dir)
     val masked = serve()
     // fourth live-aside = the log's own swap (3 probe tables fold first)
     var seen = 0
@@ -1423,7 +1015,7 @@ class SidecarDiskSpec extends AnyFunSuite {
         if (seen == 4) sys.error("injected crash at the log's own swap")
       }
     try {
-      intercept[RuntimeException](Dedup.compactTextProbeIndex(s, dir))
+      intercept[RuntimeException](DurableIndex.textProbe.compact(s, dir))
       ()
     } finally CorpusIndexes.crashHook = _ => ()
     assert(seen == 4, "the crash must have hit the log's swap, not a table's")
@@ -1433,8 +1025,8 @@ class SidecarDiskSpec extends AnyFunSuite {
       "crashed-log state must serve the folded tables unmasked-and-correct")
     // the next fold heals the log FIRST (roll-forward of its folded,
     // empty generation), then finds no tombstones and no-ops the fold
-    Dedup.compactTextProbeIndex(s, dir)
-    assert(Dedup.loadTextProbeTombstones(s, dir)
+    DurableIndex.textProbe.compact(s, dir)
+    assert(DurableIndex.textProbe.tombstones(s, dir)
       .map(_.count()).getOrElse(0L) == 0L,
       "the healed log must be the folded (cleared) generation")
     assert(serve() == masked, "serving must be unchanged through the heal")

@@ -1006,9 +1006,8 @@ class StreamingExtrasSpec extends AnyFunSuite {
     import graft.ops.Similarity
     val all = Similarity.normedVectors(spark, TestSpark.sfDir)
     val hist = all.filter($"vec_id" % 7 =!= 2)
-    val histIdx = Similarity.assignByCodebook(hist, Similarity.codebookOf(hist))
     val root = java.nio.file.Files.createTempDirectory("graft-anni-idx").toString
-    Similarity.persistIvfIndex(histIdx, root)
+    graft.ops.DurableIndex.ivf.persist(hist, root)
     val arrivals = Tables.embeddings(spark, TestSpark.sfDir)
       .filter($"vec_id" % 7 === 2).select($"vec_id", $"embedding")
       .as[(Long, Array[Float])].collect().sortBy(_._1)
@@ -1043,7 +1042,7 @@ class StreamingExtrasSpec extends AnyFunSuite {
     val batchAssign = Similarity.ivfUpsertAssign(
       Tables.embeddings(spark, TestSpark.sfDir)
         .filter($"vec_id" % 7 === 2).select($"vec_id", $"embedding"),
-      Similarity.loadIvfIndex(spark, root))
+      graft.ops.DurableIndex.ivf.raw(spark, root).head)
       .select($"vec_id", $"cell_id")
     assert(streamed.count() == batchAssign.count() && streamed.count() > 0)
     assert(streamed.except(batchAssign).count() == 0)
@@ -1077,8 +1076,7 @@ class StreamingExtrasSpec extends AnyFunSuite {
     val ivfDelta = java.nio.file.Files.createTempDirectory("graft-empty-ivfd").toString
     val histN = Similarity.normedVectors(spark, TestSpark.sfDir)
       .filter($"vec_id" % 7 =!= 2)
-    Similarity.persistIvfIndex(
-      Similarity.assignByCodebook(histN, Similarity.codebookOf(histN)), ivfRoot)
+    graft.ops.DurableIndex.ivf.persist(histN, ivfRoot)
     val ivfServe = graft.streaming.StreamingAnnIngest
       .servingIndex(spark, ivfRoot, ivfDelta)
     assert(ivfServe.count() == histN.count(),
@@ -1086,7 +1084,7 @@ class StreamingExtrasSpec extends AnyFunSuite {
     // SRP door
     val srpRoot = java.nio.file.Files.createTempDirectory("graft-empty-srp").toString
     val srpDelta = java.nio.file.Files.createTempDirectory("graft-empty-srpd").toString
-    Similarity.persistSrpIndex(hist, srpRoot)
+    graft.ops.DurableIndex.srp.persist(hist, srpRoot)
     assert(graft.streaming.StreamingSrpIngest
       .servingIndex(spark, srpRoot, srpDelta).count() == hist.count())
     // a nonexistent delta dir (job not even started) also serves
@@ -1103,7 +1101,7 @@ class StreamingExtrasSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding")
     val hist = emb.filter($"vec_id" % 7 =!= 2)
     val root = java.nio.file.Files.createTempDirectory("graft-srpi-idx").toString
-    Similarity.persistSrpIndex(hist, root)
+    graft.ops.DurableIndex.srp.persist(hist, root)
     val arrivals = emb.filter($"vec_id" % 7 === 2)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val delta = java.nio.file.Files.createTempDirectory("graft-srpi-delta").toString
@@ -1150,6 +1148,20 @@ class StreamingExtrasSpec extends AnyFunSuite {
     assert(served == rows(Similarity.srpProbe(Similarity.srpSignatures(emb),
       queries, k = 8)) && served.nonEmpty,
       "serving the streamed deltas must equal serving from-scratch signatures")
+
+    // deletes mask AFTER the union: take down one indexed vector and
+    // one streamed arrival, each a served neighbor — neither may serve
+    val top = Similarity.srpProbe(
+      graft.streaming.StreamingSrpIngest.servingIndex(spark, root, delta),
+      queries, k = 8).select($"vec_id").distinct().as[Long].collect().toSet
+    val dead = Seq(top.filter(_ % 7 != 2).min, top.filter(_ % 7 == 2).min)
+    graft.ops.DurableIndex.srp.delete(dead.toDF("vec_id"), root)
+    val masked = graft.streaming.StreamingSrpIngest.servingIndex(spark, root, delta)
+    assert(masked.filter($"vec_id".isin(dead: _*)).count() == 0,
+      "a deleted vector is still in the SRP serving view")
+    assert(Similarity.srpProbe(masked, queries, k = 8)
+      .filter($"vec_id".isin(dead: _*)).count() == 0,
+      "SRP serving returned a deleted vector")
   }
 
   test("StreamingAudioDedup restart replays the uncommitted batch exactly-once; union equals batch m18; disk index form agrees") {
@@ -1192,12 +1204,12 @@ class StreamingExtrasSpec extends AnyFunSuite {
 
     // the durable-index form probes identically with no decode pass
     val idxDir = java.nio.file.Files.createTempDirectory("graft_sad_idx").toString
-    Multimodal.persistAudioIndex(
-      Multimodal.wavTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0),
+    graft.ops.DurableIndex.audio.persist(
+      Multimodal.wavTable(spark, TestSpark.sfDir).filter($"doc_id" % 5 =!= 0).toDF(),
       idxDir)
     val fromDisk = graft.streaming.StreamingAudioDedup.probeBatch(
       newRows.toSeq.toDF("doc_id", "payload"),
-      Multimodal.loadAudioIndex(spark, idxDir))
+      graft.ops.DurableIndex.audio.serving(spark, idxDir).head)
     assert(fromDisk.count() == batchRun.count())
     assert(fromDisk.except(batchRun).count() == 0)
     assert(batchRun.except(fromDisk).count() == 0)

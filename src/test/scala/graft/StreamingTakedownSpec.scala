@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - a takedown wave landed by the door is honored by the NEXT
   *    serving trigger (no verdict names a taken-down carrier, and the
-  *    batch equals a batch probe of the masked index bit-for-bit);
+  *    batch equals a batch probe of the masked index bit-for-bit) —
+  *    a SECOND wave of distinct ids too, in the serving door's session
+  *    and in this one, both of which already read the log;
   *  - a repeated wave is a set-level no-op (audit: n_new_tombstones=0,
   *    total unchanged) — the anti-join-before-append discipline;
   *  - a forced replay (dropped commit marker, restart) rewrites the
@@ -78,28 +80,57 @@ class StreamingTakedownSpec extends AnyFunSuite {
       assert(b1.count() == expect.count())
       assert(b1.except(expect).count() == 0 && expect.except(b1).count() == 0)
 
-      // wave 2 repeats the same ids: set-level no-op, audited as such
+      // wave 2: DISTINCT ids (batch 1's own carriers), after both the
+      // serving door's session and this one have read the log
+      val carriers2 = b1.filter($"best_match".isNotNull)
+        .select($"best_match").distinct().as[Long].collect().sorted
+      assert(carriers2.nonEmpty, "fixture must emit matches in batch 1")
+      delIn.addData(carriers2.toSeq: _*)
+      tdQ.processAllAvailable()
+      val nDead = (carriers.length + carriers2.length).toLong
+      val a1 = spark.read.parquet(s"$tOut/batch_id=1")
+        .select($"n_new_tombstones", $"n_tombstones_total", $"n_docs_served")
+        .as[(Long, Long, Long)].head()
+      assert(a1 == ((carriers2.length.toLong, nDead, histCount - nDead)),
+        s"wave 2 audit wrong: $a1")
+      probeIn.addData(probeSlice.toSeq)
+      serveQ.processAllAvailable()
+      val b2 = spark.read.parquet(s"$sOut/batch_id=2")
+      val dead = (carriers ++ carriers2).toSeq
+      assert(b2.filter($"best_match".isin(dead: _*)).count() == 0,
+        "a verdict names a carrier of the second wave")
+      val probeDf = probeSlice.toSeq.toDF("doc_id", "text")
+      val served = Dedup.multiSignalProbeIndexed(probeDf,
+        Dedup.loadTextProbeIndex(spark, dir))
+      val rebuilt = Dedup.multiSignalProbeIndexed(probeDf,
+        Dedup.buildTextProbeIndex(hist.filter(!$"doc_id".isin(dead: _*))))
+      assert(served.except(rebuilt).count() == 0 &&
+        rebuilt.except(served).count() == 0,
+        "this session's served index must equal rebuild-minus-deleted")
+      assert(b2.except(served).count() == 0 && served.except(b2).count() == 0)
+
+      // wave 3 repeats wave 1's ids: set-level no-op, audited as such
       delIn.addData(carriers.toSeq: _*)
       tdQ.processAllAvailable()
-      val a1 = spark.read.parquet(s"$tOut/batch_id=1")
+      val a2 = spark.read.parquet(s"$tOut/batch_id=2")
         .select($"n_arrived", $"n_new_tombstones", $"n_tombstones_total")
         .as[(Long, Long, Long)].head()
-      assert(a1 == ((carriers.length.toLong, 0L, carriers.length.toLong)),
-        s"repeat wave must append nothing: $a1")
+      assert(a2 == ((carriers.length.toLong, 0L, nDead)),
+        s"repeat wave must append nothing: $a2")
     } finally { serveQ.stop(); tdQ.stop() }
 
     // forced replay of the takedown door: drop the LAST commit marker
-    // so restart re-executes batch 1 (the repeat wave) from the log
+    // so restart re-executes batch 2 (the repeat wave) from the log
     // state its first run left
     val auditBefore = spark.read.parquet(tOut).orderBy($"batch_id")
       .collect().toSeq.map(_.toString)
-    val logBefore = graft.ops.Dedup.loadTextProbeTombstones(spark, dir)
+    val logBefore = graft.ops.DurableIndex.textProbe.tombstones(spark, dir)
       .map(_.count()).getOrElse(0L)
     val commits = new java.io.File(s"$tCkpt/commits").listFiles()
       .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.map(_.getName.toLong).toSeq == Seq(0L, 1L))
+    assert(commits.map(_.getName.toLong).toSeq == Seq(0L, 1L, 2L))
     assert(commits.last.delete())
-    val crc = new java.io.File(s"$tCkpt/commits/.1.crc")
+    val crc = new java.io.File(s"$tCkpt/commits/.2.crc")
     if (crc.exists()) assert(crc.delete())
     val tdQ2 = startTakedown()
     try tdQ2.processAllAvailable() finally tdQ2.stop()
@@ -107,7 +138,7 @@ class StreamingTakedownSpec extends AnyFunSuite {
       .collect().toSeq.map(_.toString)
     assert(auditAfter == auditBefore,
       "replayed takedown batch must rewrite identical audit bytes")
-    assert(graft.ops.Dedup.loadTextProbeTombstones(spark, dir)
+    assert(graft.ops.DurableIndex.textProbe.tombstones(spark, dir)
       .map(_.count()).getOrElse(0L) == logBefore,
       "replay must not grow the delete log")
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** Model-based property test for the shared delete-log lifecycle
-  * (CorpusIndexes.TombLog), driven through the image-index public API
+  * (DurableIndex over CorpusIndexes.TombLog), driven through the image family
   * (the cheapest family — hash rows, no corpus): random interleavings
   * of delete / refresh / compact against a driver-side model of the
   * contract, asserting after EVERY operation that the served id set
@@ -49,23 +49,24 @@ object TombLogPropertySpec extends Properties("tomb-log") {
     Prop.forAllNoShrink(genOps) { ops =>
       val s = TestSpark.spark
       import s.implicits._
-      import graft.ops.Multimodal
+      import graft.ops.{DurableIndex, Multimodal}
+      val idx = DurableIndex.image
       val dir = java.nio.file.Files.createTempDirectory("graft-tombprop").toString
       def media(ids: Set[Long]) =
         ids.toSeq.sorted.map(id => (id, Multimodal.PngCodec.encode(id)))
-          .toDF("doc_id", "payload").as[Multimodal.PngRow]
+          .toDF("doc_id", "payload")
       val seed: Set[Long] = universe.filter(_ % 2 == 0).toSet
-      Multimodal.persistImageIndex(media(seed), dir)
+      idx.persist(media(seed), dir)
       var present = seed
       var tombs = Set.empty[Long]
       def served(): Set[Long] =
-        Multimodal.loadImageIndex(s, dir).select($"doc_id").as[Long]
+        idx.serving(s, dir).head.select($"doc_id").as[Long]
           .collect().toSet
       val failures = scala.collection.mutable.ArrayBuffer.empty[String]
       ops.zipWithIndex.foreach { case (op, i) =>
         op match {
           case Delete(ids) =>
-            Multimodal.deleteFromImageIndex(ids.toSeq.toDF("doc_id"), dir)
+            idx.delete(ids.toSeq.toDF("doc_id"), dir)
             tombs ++= ids
           case Refresh(ids) =>
             // the model refreshes only NEW ids (an id already present
@@ -76,16 +77,16 @@ object TombLogPropertySpec extends Properties("tomb-log") {
             if (fresh.nonEmpty) {
               if (fresh.intersect(tombs).nonEmpty) {
                 val threw =
-                  try { Multimodal.refreshImageIndex(media(fresh), dir); false }
+                  try { idx.refresh(media(fresh), dir); false }
                   catch { case _: IllegalArgumentException => true }
                 if (!threw) failures += s"op $i: tombstoned re-add accepted"
               } else {
-                Multimodal.refreshImageIndex(media(fresh), dir)
+                idx.refresh(media(fresh), dir)
                 present ++= fresh
               }
             }
           case Compact =>
-            Multimodal.compactImageIndex(s, dir)
+            idx.compact(s, dir)
             present --= tombs
             tombs = Set.empty
         }
